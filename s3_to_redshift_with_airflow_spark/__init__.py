@@ -24,7 +24,7 @@ Layout:
                     connected components, skew salting, multimodal
     sinks/        — JDBC upsert writer (staging table + transactional merge)
     streaming/    — Structured Streaming variant of the pipeline + stateful ops
-    pipelines/    — the reference DAG as one lazy Spark job
+    pipelines/    — the reference DAG, each shared subplan run once
     plans/        — query registry: every operator as (spark_fn, oracle_sql)
 """
 

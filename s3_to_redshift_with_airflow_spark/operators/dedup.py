@@ -151,24 +151,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash signature per document: for hash function i, the minimum
-    seeded xxhash64 over the shingle set. Returns (id, sig: array<long>).
-
-    One projection, no shuffle; num_hashes×|shingles| hash evaluations per
-    row inside codegen."""
-    return _signatures_from_shingled(
-        _shingled(df, id_col, text_col, n), id_col, num_hashes, seed
-    )
-
-
 def _signatures_from_shingled(
     sh: DataFrame, id_col: str, num_hashes: int, seed: int
 ) -> DataFrame:

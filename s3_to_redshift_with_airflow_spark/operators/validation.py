@@ -4,7 +4,9 @@ Re-expresses the reference's schema/quality checker (reference:
 dags/etl/schema_check.py) Spark-first. The reference runs one pandas pass per
 rule (nulls, dups, ranges, whitelist — :95-224); here the whole rule registry
 for a table compiles into ONE aggregate plan, so a 100 TB table is scanned
-once regardless of rule count.
+once regardless of rule count, and `validate_datasets` runs every table's
+aggregate as ONE query: one collect() covers all tables, whose scans run as
+independent, concurrent stages.
 
 Rule semantics preserved (schema_check.py:77-127, 258-329):
   - required column absent            → ERROR   (V1)
@@ -26,6 +28,7 @@ summary stats.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
@@ -171,6 +174,18 @@ def evaluate(
 
     `extra_errors` lets source-level checks (e.g. CSV header validation,
     sources.readers.missing_required_columns) flow into the same report."""
+    metrics = metrics_plan(df, rules).collect()[0].asDict()
+    return _roll_up(df, rules, dataset, extra_errors, metrics)
+
+
+def _roll_up(
+    df: DataFrame,
+    rules: TableRules,
+    dataset: str,
+    extra_errors: list[str] | None,
+    metrics: dict,
+) -> dict:
+    """One table's report from its schema and its `metrics_plan` row."""
     errors: list[str] = list(extra_errors or [])
     warnings: list[str] = []
     present = set(df.columns)
@@ -185,8 +200,6 @@ def evaluate(
             actual = df.schema[c].dataType.simpleString()
             if actual not in allowed:
                 warnings.append(f"column {c} dtype {actual} not in {allowed}")
-
-    metrics = metrics_plan(df, rules).collect()[0].asDict()
 
     # V3: empty relation (error)
     if metrics["row_count"] == 0:
@@ -230,15 +243,38 @@ def validate_datasets(
     extra_errors: dict[str, list[str]] | None = None,
 ) -> dict:
     """Validate several tables (the reference's validate_datasets task,
-    schema_check.py:258-329): aggregate report; errors abort when asked."""
+    schema_check.py:258-329): aggregate report; errors abort when asked.
+
+    All tables' metrics run as ONE query: each table's one-row
+    `metrics_plan` becomes a struct column and the rows are cross-joined,
+    so one collect() returns every table's metrics and AQE runs the
+    tables' independent scan stages concurrently."""
     extra_errors = extra_errors or {}
+    metrics: list[dict] = []
+    if named:
+        row = reduce(
+            DataFrame.crossJoin,
+            [
+                metrics_plan(df, rules).select(F.struct("*").alias(f"m{i}"))
+                for i, (df, rules) in enumerate(named.values())
+            ],
+        ).collect()[0]
+        metrics = [m.asDict() for m in row]
     reports = {
-        name: evaluate(df, rules, name, extra_errors.get(name))
-        for name, (df, rules) in named.items()
+        name: _roll_up(df, rules, name, extra_errors.get(name), m)
+        for (name, (df, rules)), m in zip(named.items(), metrics)
     }
     overall = {"datasets": reports, "passed": all(r["passed"] for r in reports.values())}
-    if raise_on_error and not overall["passed"]:
-        failed = [n for n, r in reports.items() if not r["passed"]]
+    if raise_on_error:
+        raise_on_failure(overall)
+    return overall
+
+
+def raise_on_failure(report: dict) -> None:
+    """V10 abort: raise ValueError naming every failed dataset and its
+    errors, for a `validate_datasets` report (schema_check.py:320-329)."""
+    reports = report["datasets"]
+    failed = [n for n, r in reports.items() if not r["passed"]]
+    if failed:
         raise ValueError(f"validation failed for {failed}: "
                          + "; ".join(e for n in failed for e in reports[n]["errors"]))
-    return overall

@@ -7,11 +7,13 @@ from __future__ import annotations
 import csv
 import json
 import os
+import shutil
 import tempfile
 
 import pytest
 
 from s3_to_redshift_with_airflow_spark.pipelines.music_etl import run_pipeline
+from s3_to_redshift_with_airflow_spark.sources.writers import archive_files
 
 
 @pytest.fixture(scope="module")
@@ -97,10 +99,15 @@ def test_pipeline_end_to_end(spark, fixture_dir):
     assert "afrobeat" in warns  # whitelist warn-only (schema_check.py:176-181)
 
 
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_pipeline_validation_aborts_on_missing_column(spark, fixture_dir, tmp_path):
     # streams file without listen_time → required-column error aborts (V1)
     bad = tmp_path / "bad.csv"
     bad.write_text("user_id,track_id\n1,t1\n")
+    spark.catalog.clearCache()  # isolate from frames other tests persisted
     with pytest.raises(ValueError, match="streams"):
         run_pipeline(
             spark,
@@ -109,3 +116,35 @@ def test_pipeline_validation_aborts_on_missing_column(spark, fixture_dir, tmp_pa
             str(bad),
             str(tmp_path / "out"),
         )
+    # the report is written before the abort (schema_check.py:320-329) and
+    # the run's persisted inputs are released
+    with open(tmp_path / "out" / "validation_report.json") as f:
+        report = json.load(f)
+    assert report["passed"] is False
+    errors = report["datasets"]["streams"]["errors"]
+    assert any("missing required column(s) ['listen_time']" in e for e in errors)
+    assert _cache_is_empty(spark)
+
+
+def test_pipeline_kpis_outlive_archived_inputs(spark, fixture_dir, tmp_path):
+    """The returned KPI tables are materialized: archiving the stream files
+    after the run, as the hourly DAG does before its warehouse load reads
+    them, changes nothing they return, and the run leaves no cache entry."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    streams = [shutil.copy(p, landing) for p in fixture_dir["streams"]]
+    spark.catalog.clearCache()  # isolate from frames other tests persisted
+    out = run_pipeline(
+        spark, fixture_dir["users"], fixture_dir["songs"], streams,
+        str(tmp_path / "out"),
+    )
+    assert _cache_is_empty(spark)
+    assert len(archive_files(spark, str(landing), str(tmp_path / "archive"))) == 2
+    assert not any(os.path.exists(p) for p in streams)
+    # the values test_pipeline_end_to_end's run computes from these files
+    assert sorted(tuple(r) for r in out["genre_kpis"].collect()) == [
+        ("ROCK", 2, 100000.0), ("afrobeat", 2, 300000.0), ("rock", 1, 200000.0),
+    ]
+    assert sorted(tuple(r) for r in out["hourly_kpis"].collect()) == [
+        (0, 1, "t1", 1.0), (1, 1, "t2", 1.0), (2, 1, "t3", 1.0),
+    ]

@@ -113,3 +113,37 @@ def test_lenient_csv_corrupt_records_in_report(spark, tmp_path):
     # corrupt raw text is preserved for quarantine/debugging
     bad = {r["_corrupt_record"] for r in df.collect() if r["_corrupt_record"]}
     assert bad == {"2,not_a_number", "4"}
+
+
+def test_validate_datasets_matches_evaluate_per_table(spark, dirty, tmp_path):
+    """validate_datasets runs every table's metrics as one query; each
+    table's report equals the one evaluate() builds alone: an empty table
+    (V3), null keys (V5), duplicate keys (V6), whitelist offenders with
+    their sample (V7), range violations (V9), a lenient frame's corrupt
+    records, header errors passed in, and one frame validated twice."""
+    from s3_to_redshift_with_airflow_spark.sources.readers import read_csv_lenient
+    from pyspark.sql import types as T
+
+    p = tmp_path / "lenient.csv"
+    p.write_text("user_id,value\n1,10\n2,oops\n3\n")
+    lenient = read_csv_lenient(
+        spark, str(p),
+        T.StructType([T.StructField("user_id", T.LongType()),
+                      T.StructField("value", T.LongType())]),
+    )
+    named = {
+        "empty": (spark.createDataFrame([], "user_id long"),
+                  TableRules(required_columns=["user_id"], key_columns=["user_id"])),
+        "dirty": (dirty, RULES),
+        "dirty_again": (dirty, RULES),
+        "lenient": (lenient, TableRules(required_columns=["user_id", "track_id"])),
+    }
+    extra = {"lenient": ["lenient.csv: missing required column(s) ['track_id']"]}
+    report = validate_datasets(named, raise_on_error=False, extra_errors=extra)
+    for name, (df, rules) in named.items():
+        assert report["datasets"][name] == evaluate(df, rules, name, extra.get(name))
+    assert not report["passed"]
+    got = report["datasets"]
+    assert "dataset is empty" in got["empty"]["errors"]
+    assert any("outside whitelist; sample ['metal']" in w for w in got["dirty"]["warnings"])
+    assert any("malformed rows" in w for w in got["lenient"]["warnings"])
