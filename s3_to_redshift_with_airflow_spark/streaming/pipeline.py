@@ -216,6 +216,17 @@ def _write_ledger(spark: SparkSession, dir_path: str, epoch_id: int) -> None:
     )
 
 
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path-class) for `path` — any Hadoop scheme. The ONE
+    place this module opens a FileSystem: every store filesystem op goes
+    through it, so a wrapper installed here (the tests' crash injection)
+    sees every mutation."""
+    jvm = spark._jvm  # noqa: SLF001
+    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
+    P = jvm.org.apache.hadoop.fs.Path
+    return P(path).getFileSystem(conf), P
+
+
 def _install(
     spark: SparkSession, tmp: str, target_path: str, prev_path: str | None = None
 ) -> None:
@@ -226,25 +237,23 @@ def _install(
     Here the invariant is: at every instant, a COMPLETE artifact exists at
     `target` or at the park path (read-side resolution: `_store_path`).
     A crash inside the rename window parks the store at `__prev`; the next
-    install's restore step (or any `_store_path` read) recovers it. Cost:
-    two metadata renames instead of delete+rename — free.
+    install's restore step (`_restore_park`, or any `_store_path` read)
+    recovers it. Cost: two metadata renames instead of delete+rename —
+    free. Every filesystem op goes through `_hadoop_fs`, so a crash
+    injected there reaches this install's own restore, park, swap and
+    cleanup.
 
-    `prev_path` overrides the park location — used by the bucketed stores,
-    whose park must live OUTSIDE the partitioned table root (a
-    `bucket=K__prev` dir inside it would poison partition discovery)."""
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    P = jvm.org.apache.hadoop.fs.Path
+    `prev_path` overrides the park location — used only by the catch-up
+    bucket install (`_catch_up_install`), whose park must live OUTSIDE the
+    partitioned table root (a `bucket=K__prev` dir inside it would poison
+    partition discovery)."""
+    fs, P = _hadoop_fs(spark, target_path)
     tgt = P(target_path)
     prev = P(prev_path or target_path.rstrip("/") + "__prev")
-    fs = tgt.getFileSystem(conf)
-    if not fs.exists(tgt) and fs.exists(prev):
-        # a previous install crashed inside its swap window: the live
-        # store is parked at the prev path. Restore it so the invariant
-        # holds through this install too.
-        _rename_or_raise(fs, prev, tgt)
-    if fs.exists(prev):
-        fs.delete(prev, True)  # leftover from a completed install
+    # a park left by a previous install that crashed inside its swap
+    # window is restored (or, beside a live target, dropped) first, so
+    # the invariant holds through this install too
+    _restore_park(fs, prev, tgt)
     if fs.exists(tgt):
         fs.mkdirs(prev.getParent())  # park parent may not exist yet
         _rename_or_raise(fs, tgt, prev)
@@ -261,18 +270,28 @@ def _rename_or_raise(fs, src, dst) -> None:
         raise IOError(f"rename failed: {src} -> {dst}")
 
 
+def _restore_park(fs, park, target) -> None:
+    """The one park-restore rule: a park whose target is absent holds the
+    live store (a crash landed inside the two-rename swap window) and is
+    renamed back; a park beside an existing target is a completed
+    install's stale leftover (crash after install, before cleanup) and is
+    deleted."""
+    if not fs.exists(park):
+        return
+    if fs.exists(target):
+        fs.delete(park, True)
+    else:
+        _rename_or_raise(fs, park, target)
+
+
 def _store_path(spark: SparkSession, target_path: str) -> str:
     """Resolve the live store: `target_path` normally, or the swap
     protocol's `__prev` park when a crash landed inside the two-rename
     window (target renamed away, replacement not yet installed). Pure
     read-side resolution — no filesystem mutation; the next `_install`
     moves the parked store back."""
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    P = jvm.org.apache.hadoop.fs.Path
-    tgt = P(target_path)
-    fs = tgt.getFileSystem(conf)
-    if fs.exists(tgt):
+    fs, P = _hadoop_fs(spark, target_path)
+    if fs.exists(P(target_path)):
         return target_path
     prev = target_path.rstrip("/") + "__prev"
     if fs.exists(P(prev)):
@@ -288,21 +307,9 @@ def _recover_parked(spark: SparkSession, target_path: str) -> None:
     `segs/`; compaction counts its children): resolving the read path is
     not enough there, because publishing into a freshly-created `segs/`
     while the real one sits parked would leave two half-stores (ADVICE
-    r8 #1). If the target is absent and a park exists, the park moves
-    back; a leftover park alongside an existing target (crash after
-    install, before cleanup) is stale and is deleted."""
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    P = jvm.org.apache.hadoop.fs.Path
-    tgt = P(target_path)
-    prev = P(target_path.rstrip("/") + "__prev")
-    fs = tgt.getFileSystem(conf)
-    if not fs.exists(prev):
-        return
-    if fs.exists(tgt):
-        fs.delete(prev, True)  # stale leftover from a completed install
-    else:
-        _rename_or_raise(fs, prev, tgt)  # parked — restore
+    r8 #1). Applies `_restore_park` to the directory's park."""
+    fs, P = _hadoop_fs(spark, target_path)
+    _restore_park(fs, P(target_path.rstrip("/") + "__prev"), P(target_path))
 
 
 def _last_applied_epoch(spark: SparkSession, target_path: str) -> int:
@@ -331,29 +338,18 @@ def _last_applied_epoch(spark: SparkSession, target_path: str) -> int:
     ledger_path = _store_path(
         spark, _store_path(spark, target_path).rstrip("/") + "/_ledger"
     )
-    jvm = spark._jvm  # noqa: SLF001
-    P = jvm.org.apache.hadoop.fs.Path
+    fs, P = _hadoop_fs(spark, ledger_path)
     p = P(ledger_path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
     if not fs.exists(p):
         return -1  # no ledger written yet
     try:
-        is_file = fs.getFileStatus(p).isFile()
-        if is_file:
+        if fs.getFileStatus(p).isFile():
             # current format: one ASCII int, read driver-side (no Spark
             # job). A live ledger is always complete (it only becomes
             # visible via the install rename), so a parse failure is a
             # REAL storage fault — raise, same discipline as the legacy
             # parquet branch below.
-            stream = fs.open(p)
-            try:
-                reader = jvm.java.io.BufferedReader(
-                    jvm.java.io.InputStreamReader(stream)
-                )
-                line = reader.readLine()
-            finally:
-                stream.close()
-            return int(line)
+            return int(_read_text_sidecar_lines(spark, ledger_path)[0])
     except Exception as e:  # noqa: BLE001
         # exists -> getFileStatus/open is not atomic: a concurrent
         # ledger install (two-rename swap) between those calls surfaces
@@ -373,7 +369,7 @@ def _last_applied_epoch(spark: SparkSession, target_path: str) -> int:
         )
         return int(rows[0][0]) if rows else -1
     except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+        if _is_path_missing(e):
             return -1  # no ledger written yet
         raise
 
@@ -470,9 +466,8 @@ def _epoch_effective(
 
 def _path_bytes(spark: SparkSession, path: str) -> int:
     """Total bytes under `path` (file or directory), any Hadoop scheme."""
-    sc = spark.sparkContext
-    p = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, P = _hadoop_fs(spark, path)
+    p = P(path)
     if not fs.exists(p):
         return 0
     return fs.getContentSummary(p).getLength()
@@ -678,6 +673,27 @@ def foreach_batch_weighted_agg_maintain(
     return _sink
 
 
+# --- bucketed stores -------------------------------------------------------
+# A bucketed store keeps its state in `root/bucket=K/` dirs keyed by
+# `bucket_expr`; an epoch rewrites (or appends to) ONLY the buckets its
+# delta touches, so a crash can leave some touched buckets moved and others
+# not. The merge decides which of the two commit protocols is sound:
+#   - CATCH-UP, when the merge is idempotent per key (re-merging a key that
+#     already holds the epoch changes nothing): the bucketed CDC-SCD2 and
+#     upsert sinks and the dedup / near-dup gates' folds.
+#     `_catch_up_install` installs each bucket with a two-rename park under
+#     `root__prevb/`, then the ledger (if any); `_recover_buckets` restores
+#     parks before the next epoch, whose replay re-merges every touched
+#     bucket, so the not-yet-updated ones catch up.
+#   - PARK-UNTIL-LEDGER ROLLBACK, when the merge is additive (a replay onto
+#     an updated bucket would double-add): the bucketed weighted-agg and
+#     join-agg-retract sinks (park root `root__prevb/`) and the weighted
+#     relation store's appends (`root__relprev/`).
+#     `_park_until_ledger_commit` commits an `_inflight` manifest before any
+#     bucket moves and the ledger last; `_park_until_ledger_recover` rewinds
+#     an epoch whose manifest is ahead of the ledger, else drops leftovers.
+
+
 def foreach_batch_weighted_agg_maintain_bucketed(
     target_path: str,
     keys: list[str],
@@ -758,29 +774,70 @@ def _read_parquet_driver_listed(spark: SparkSession, paths: list[str]) -> DataFr
 
 
 def _read_touched_buckets(
-    spark: SparkSession, target_path: str, touched: list[int]
+    spark: SparkSession,
+    target_path: str,
+    touched: list[int],
+    empty: DataFrame | None = None,
 ) -> DataFrame:
     """The bucketed store's touched slice, read by EXPLICIT bucket-dir
     paths: a partition-pruned read of the root still LISTS every bucket
     dir, so epoch cost would track the layout constant (n_buckets) rather
     than the work — measured 2.2->8.1 s across a 64->1600-bucket sweep on
-    the dedup gate before the explicit-path read (SCALE_r10.jsonl).
-    Touched buckets that do not exist yet (first key hashing into them)
-    are simply skipped; when NONE exist the root read supplies the typed
-    empty slice (one listing on the rare all-new-buckets epoch)."""
-    fs, P = _hadoop_fs(spark, target_path)
-    root = target_path.rstrip("/")
-    paths = [
-        p
-        for p in (f"{root}/bucket={int(b)}" for b in touched)
-        if fs.exists(P(p))
-    ]
+    the dedup gate before the explicit-path read (SCALE_r10.jsonl). The
+    listing stays on the driver (`_read_parquet_driver_listed`). Touched
+    buckets that do not exist yet (first key hashing into them) are
+    simply skipped; when NONE exist, `empty` is the slice (the gates'
+    stores may not exist at all yet), else the root read supplies the
+    typed empty slice (one listing on the rare all-new-buckets epoch)."""
+    paths = _existing_bucket_dirs(spark, target_path, touched)
     if paths:
         return _read_parquet_driver_listed(spark, paths)  # no partition column
+    if empty is not None:
+        return empty
     return (
         spark.read.parquet(target_path)
         .filter(F.col("bucket").isin([int(b) for b in touched]))
         .drop("bucket")
+    )
+
+
+def _existing_bucket_dirs(
+    spark: SparkSession, target_path: str, touched: list[int]
+) -> list[str]:
+    """The `bucket=K` dirs of the touched buckets that exist."""
+    fs, P = _hadoop_fs(spark, target_path)
+    root = target_path.rstrip("/")
+    return [
+        p
+        for p in (f"{root}/bucket={int(b)}" for b in touched)
+        if fs.exists(P(p))
+    ]
+
+
+def _touched_buckets(df: DataFrame, keys: list[str], n_buckets: int) -> list[int]:
+    """The sorted buckets `df`'s keys hash to: one distinct + collect,
+    bounded by n_buckets (a layout constant, ≤ thousands at 100 TB) — a
+    sanctioned driver-side decision input."""
+    return sorted(
+        int(r["b"])
+        for r in df.select(bucket_expr(keys, n_buckets).alias("b"))
+        .distinct()
+        .collect()
+    )
+
+
+def _write_buckets(
+    df: DataFrame, path: str, keys: list[str], n_buckets: int
+) -> None:
+    """The bucketed partitionBy write every bucketed store uses, for its
+    seed and for each epoch's scratch slice (the explicit n_buckets
+    repartition is explained on `write_bucketed_store`)."""
+    (
+        df.withColumn("bucket", bucket_expr(keys, n_buckets))
+        .repartition(n_buckets, "bucket")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(path)
     )
 
 
@@ -803,12 +860,7 @@ def _bucketed_weighted_merge(
     foreach_batch_weighted_agg_maintain_bucketed."""
     from ..operators.relational import apply_weighted_delta
 
-    touched = sorted(
-        r["b"]
-        for r in delta.select(bucket_expr(keys, n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    )
+    touched = _touched_buckets(delta, keys, n_buckets)
     if not touched:
         return  # empty epoch: state unchanged, ledger not advanced
     # direct read, not _store_path: bucketed stores park per-bucket
@@ -817,42 +869,123 @@ def _bucketed_weighted_merge(
     merged = apply_weighted_delta(
         state_slice, delta, keys, value_col, weight_col=weight_col
     )
-    root = target_path.rstrip("/")
-    tmp = root + f"__waggb_epoch{epoch_id}"
-    (
-        merged.withColumn("bucket", bucket_expr(keys, n_buckets))
-        .repartition(n_buckets, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(tmp)
+    tmp = target_path.rstrip("/") + f"__waggb_epoch{epoch_id}"
+    _write_buckets(merged, tmp, keys, n_buckets)
+    _park_until_ledger_commit(
+        spark, target_path, tmp, "__prevb", epoch_id, touched, _wagg_move
     )
-    _write_ledger(spark, tmp, epoch_id)
-    fs, P = _hadoop_fs(spark, target_path)
-    # the rewind record: which buckets this epoch touches, and which
-    # of them exist pre-epoch (existed=false buckets are "unbirthed"
-    # on rollback; existed=true buckets are restored from their park).
-    _write_inflight_manifest(spark, fs, P, tmp, root, epoch_id, touched)
-    fs.mkdirs(P(root + "__prevb"))
-    # mutation-begins marker: one atomic rename; recovery treats a
-    # park root WITHOUT this manifest as "nothing moved yet"
-    _rename_or_raise(
-        fs, P(f"{tmp}/_inflight"), P(root + "__prevb/_inflight")
-    )
-    for b in touched:
-        live = P(f"{root}/bucket={int(b)}")
-        park = P(f"{root}__prevb/bucket={int(b)}")
+
+
+def _wagg_move(fs, P, root: str, tmp: str, epoch_id: int, b: int) -> None:
+    """Weighted-agg bucket move: park the live bucket, rename its
+    replacement in."""
+    live = P(f"{root}/bucket={b}")
+    if fs.exists(live):
+        # parked, NOT deleted — kept until the ledger commits so a
+        # mid-loop crash can rewind (ADVICE r9)
+        _rename_or_raise(fs, live, P(f"{root}__prevb/bucket={b}"))
+    btmp = P(f"{tmp}/bucket={b}")
+    if fs.exists(btmp):
+        _rename_or_raise(fs, btmp, live)
+    # else: the z-set zero rule emptied this bucket — leaving the live
+    # dir absent IS the delete, and its park makes it rewindable
+
+
+def _wagg_rewind(fs, P, root: str, epoch: int, b: int) -> None:
+    """Weighted-agg rewind of a bucket that existed pre-epoch: its park
+    (if it was parked) replaces any half-installed live dir."""
+    live = P(f"{root}/bucket={b}")
+    park = P(f"{root}__prevb/bucket={b}")
+    if fs.exists(park):
         if fs.exists(live):
-            # parked, NOT deleted — kept until the ledger commits so
-            # a mid-loop crash can rewind (ADVICE r9)
-            _rename_or_raise(fs, live, park)
-        btmp = P(f"{tmp}/bucket={int(b)}")
-        if fs.exists(btmp):
-            _rename_or_raise(fs, btmp, live)
-        # else: the z-set zero rule emptied this bucket — leaving the
-        # live dir absent IS the delete, and its park makes it rewindable
+            fs.delete(live, True)
+        _rename_or_raise(fs, park, live)
+    # park absent: bucket never parked, live untouched
+
+
+def _park_until_ledger_commit(
+    spark: SparkSession,
+    target_path: str,
+    tmp: str,
+    park_suffix: str,
+    epoch_id: int,
+    touched: list[int],
+    move_bucket,
+) -> None:
+    """The PARK-UNTIL-LEDGER commit of an additive bucketed store, after
+    the epoch's buckets fully materialized at the scratch dir `tmp`:
+    (1) write the new ledger and (2) the `_inflight` rewind record
+    (epoch, bucket, existed-pre-epoch) into `tmp`; (3) create the park
+    root `root<park_suffix>` and (4) rename the manifest into it — the
+    mutation-begins marker, BEFORE any live dir moves; (5)
+    `move_bucket(fs, P, root, tmp, epoch_id, b)` moves each touched
+    bucket (keeping whatever its rewind needs); (6) install the ledger —
+    the commit point; (7) drop the park root and the scratch dir.
+    `_park_until_ledger_recover` is the recovery half."""
+    fs, P = _hadoop_fs(spark, target_path)
+    root = target_path.rstrip("/")
+    park_root = root + park_suffix
+    _write_ledger(spark, tmp, epoch_id)
+    _write_inflight_manifest(spark, fs, P, tmp, root, epoch_id, touched)
+    fs.mkdirs(P(park_root))
+    # one atomic rename; recovery treats a park root WITHOUT this
+    # manifest as "nothing moved yet"
+    _rename_or_raise(fs, P(f"{tmp}/_inflight"), P(park_root + "/_inflight"))
+    for b in touched:
+        move_bucket(fs, P, root, tmp, int(epoch_id), int(b))
     _install(spark, f"{tmp}/_ledger", f"{root}/_ledger")  # commit point
-    fs.delete(P(root + "__prevb"), True)
+    fs.delete(P(park_root), True)
     fs.delete(P(tmp), True)
+
+
+def _park_until_ledger_recover(
+    spark: SparkSession,
+    target_path: str,
+    park_suffix: str,
+    rewind_existed,
+    scratch_globs: tuple[str, ...],
+) -> None:
+    """The recovery half of `_park_until_ledger_commit`, run before each
+    epoch's ledger gate:
+
+      - no park root: nothing in flight;
+      - park root without a manifest: either no live dir ever moved (the
+        manifest rename precedes every move) or a post-commit cleanup was
+        interrupted mid-delete — both leave the live store consistent,
+        so the park root is dropped;
+      - manifest with ledger >= manifest epoch: the epoch COMMITTED
+        (crash between the ledger install and cleanup) — drop leftovers;
+      - manifest with ledger < manifest epoch: crash mid-mutation —
+        rewind every manifest bucket to its pre-epoch state:
+        `rewind_existed(fs, P, root, epoch, b)` for a bucket that existed
+        pre-epoch, and delete the live dir of a bucket born this epoch.
+        Re-entrant: a crash inside the rewind re-runs it, and every
+        rewind step is a no-op once done.
+
+    Then every scratch dir matching `root<glob>` for `scratch_globs` is
+    garbage (committed epochs were consumed, a rolled-back epoch rebuilds
+    its scratch from the replayed batch) and is deleted."""
+    fs, P = _hadoop_fs(spark, target_path)
+    root = target_path.rstrip("/")
+    park_root = P(root + park_suffix)
+    if fs.exists(park_root):
+        inflight = root + park_suffix + "/_inflight"
+        if fs.exists(P(inflight)):
+            rows = _read_inflight_manifest(spark, fs, P, inflight)
+            epoch = int(rows[0]["epoch"])
+            if epoch > _last_applied_epoch(spark, target_path):
+                for r in rows:
+                    b = int(r["bucket"])
+                    live = P(f"{root}/bucket={b}")
+                    if bool(r["existed"]):
+                        rewind_existed(fs, P, root, epoch, b)
+                    elif fs.exists(live):
+                        fs.delete(live, True)  # born this epoch: unbirth it
+        fs.delete(park_root, True)
+    for pat in scratch_globs:
+        stale = fs.globStatus(P(root + pat))
+        for st in list(stale) if stale is not None else []:
+            fs.delete(st.getPath(), True)
 
 
 def foreach_batch_join_agg_retract_maintain_bucketed(
@@ -902,53 +1035,15 @@ def foreach_batch_join_agg_retract_maintain_bucketed(
 
 def _rollback_or_commit_wagg(spark: SparkSession, target_path: str) -> None:
     """Recovery for the ADDITIVE bucketed store (the weighted z-set
-    aggregate maintainer): unlike `_recover_buckets` — whose catch-up
+    aggregate maintainers): unlike `_recover_buckets` — whose catch-up
     argument holds only for per-key-idempotent merges like CDC/upsert —
-    this rewinds or finalizes a crashed epoch transactionally, using the
-    `__prevb/_inflight` manifest the sink commits before any mutation:
-
-      - no park root: nothing in flight (stale scratch dirs are swept);
-      - park root without a manifest: either no live dir ever moved (the
-        manifest rename precedes every park) or a post-commit cleanup was
-        interrupted mid-delete — both leave the live store consistent,
-        so the park root is dropped;
-      - manifest with ledger >= manifest epoch: the epoch COMMITTED
-        (crash between the ledger install and cleanup) — drop leftovers;
-      - manifest with ledger < manifest epoch: crash mid-mutation —
-        rewind every manifest bucket to its pre-epoch state: restore its
-        park where one exists (delete the half-installed replacement
-        first), delete the live dir of a bucket that did not exist
-        pre-epoch. Re-entrant: a crash inside the rewind re-runs it; an
-        already-restored bucket has no park and is skipped.
-
-    After either branch, any `__waggb_epoch*` scratch dir is garbage
-    (committed epochs were consumed, the rolled-back epoch rebuilds its
-    scratch from the replayed batch) and is deleted."""
-    fs, P = _hadoop_fs(spark, target_path)
-    root = target_path.rstrip("/")
-    prev_root = P(root + "__prevb")
-    if fs.exists(prev_root):
-        inflight = root + "__prevb/_inflight"
-        if fs.exists(P(inflight)):
-            rows = _read_inflight_manifest(spark, fs, P, inflight)
-            epoch = int(rows[0]["epoch"])
-            if epoch > _last_applied_epoch(spark, target_path):
-                for r in rows:
-                    b = int(r["bucket"])
-                    live = P(f"{root}/bucket={b}")
-                    park = P(f"{root}__prevb/bucket={b}")
-                    if bool(r["existed"]):
-                        if fs.exists(park):
-                            if fs.exists(live):
-                                fs.delete(live, True)
-                            _rename_or_raise(fs, park, live)
-                        # park absent: bucket never parked, live untouched
-                    elif fs.exists(live):
-                        fs.delete(live, True)  # born this epoch: unbirth it
-        fs.delete(prev_root, True)
-    stale = fs.globStatus(P(root + "__waggb_epoch*"))
-    for st in list(stale) if stale is not None else []:
-        fs.delete(st.getPath(), True)
+    this rewinds or finalizes a crashed epoch transactionally from the
+    `__prevb/_inflight` manifest (`_park_until_ledger_recover`): a
+    rewound bucket that existed pre-epoch gets its park back. Any
+    `__waggb_epoch*` scratch dir is swept."""
+    _park_until_ledger_recover(
+        spark, target_path, "__prevb", _wagg_rewind, ("__waggb_epoch*",)
+    )
 
 
 def foreach_batch_join_agg_retract_maintain(
@@ -1095,8 +1190,9 @@ def write_bucketed_store(
     underscore-hidden) makes the store self-describing for keyed point
     lookups (`read_bucketed_store_keyed`).
 
-    Every bucketed partitionBy write here (and in the per-epoch
-    maintainers) repartitions to EXPLICITLY n_buckets partitions, not
+    Every bucketed partitionBy write here (`_write_buckets`, also used
+    for the per-epoch maintainers' scratch slices) repartitions to
+    EXPLICITLY n_buckets partitions, not
     `repartition("bucket")`: the keyless form inherits
     spark.sql.shuffle.partitions and AQE then coalesces a small store to
     ONE task that writes every bucket dir SEQUENTIALLY (~15 ms of file
@@ -1105,13 +1201,7 @@ def write_bucketed_store(
     n_buckets tasks give ~one file per bucket dir in parallel; the count
     is the store's own layout constant, so the bound is scale-adaptive
     (a 100 TB store raises n_buckets, not the core count)."""
-    (
-        df.withColumn("bucket", bucket_expr(keys, n_buckets))
-        .repartition(n_buckets, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(target_path)
-    )
+    _write_buckets(df, target_path, keys, n_buckets)
     (
         df.sparkSession.range(1)
         .select(
@@ -1149,14 +1239,7 @@ def read_bucketed_store_keyed(
     layout = spark.read.parquet(_store_path(spark, f"{root}/_layout")).collect()[0]
     bucket_keys = list(layout["bucket_keys"])
     wanted = keys_df.select(*bucket_keys).distinct()
-    touched = sorted(
-        int(r["b"])
-        for r in wanted.select(
-            bucket_expr(bucket_keys, int(layout["n_buckets"])).alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+    touched = _touched_buckets(wanted, bucket_keys, int(layout["n_buckets"]))
     return _read_touched_buckets(spark, root, touched).join(
         F.broadcast(wanted), bucket_keys, "left_semi"
     )
@@ -1229,25 +1312,46 @@ def read_bucketed_store_snapshot(spark: SparkSession, target_path: str) -> DataF
 def _recover_buckets(spark: SparkSession, target_path: str) -> None:
     """Restore bucket dirs parked at `target__prevb/bucket=K` by a crash
     inside a per-bucket swap window (park lives outside the table root so
-    partition discovery never sees it). Mirrors `_install`'s restore step:
-    a parked bucket whose target is absent moves back; a leftover park
-    whose target exists (crash after install, before cleanup) is stale —
-    delete it."""
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    P = jvm.org.apache.hadoop.fs.Path
-    prev_root = P(target_path.rstrip("/") + "__prevb")
-    fs = prev_root.getFileSystem(conf)
+    partition discovery never sees it): `_install`'s restore rule
+    (`_restore_park`) per parked bucket, then the park root is dropped."""
+    fs, P = _hadoop_fs(spark, target_path)
+    root = target_path.rstrip("/")
+    prev_root = P(root + "__prevb")
     if not fs.exists(prev_root):
         return
     for st in fs.listStatus(prev_root):
-        name = st.getPath().getName()
-        tgt = P(f"{target_path.rstrip('/')}/{name}")
-        if fs.exists(tgt):
-            fs.delete(st.getPath(), True)  # stale leftover
-        else:
-            _rename_or_raise(fs, st.getPath(), tgt)  # parked — restore
+        _restore_park(fs, st.getPath(), P(f"{root}/{st.getPath().getName()}"))
     fs.delete(prev_root, True)
+
+
+def _catch_up_install(
+    spark: SparkSession, tmp: str, target_path: str, touched: list[int]
+) -> None:
+    """The CATCH-UP commit of a bucketed store whose merge is idempotent
+    per key: install each touched bucket from the scratch dir `tmp` with
+    the two-rename park under `target__prevb/` (a touched bucket with no
+    scratch dir — e.g. a delete-only new key — is skipped), then the
+    scratch's `_ledger` if it holds one, then drop the scratch dir and
+    the park root. A crash anywhere leaves parks `_recover_buckets`
+    restores before the replay, which re-merges every touched bucket."""
+    fs, P = _hadoop_fs(spark, target_path)
+    root = target_path.rstrip("/")
+    for b in touched:
+        btmp = f"{tmp}/bucket={int(b)}"
+        if fs.exists(P(btmp)):
+            _install(
+                spark,
+                btmp,
+                f"{root}/bucket={int(b)}",
+                prev_path=f"{root}__prevb/bucket={int(b)}",
+            )
+    if fs.exists(P(f"{tmp}/_ledger")):
+        _install(spark, f"{tmp}/_ledger", f"{root}/_ledger")
+    fs.delete(P(tmp), True)
+    # each bucket's _install cleaned its own park; after a crash-free
+    # epoch the park root is empty — remove it (a crash mid-loop never
+    # reaches this line, leaving the parks for the next recovery)
+    fs.delete(P(f"{root}__prevb"), True)
 
 
 def foreach_batch_cdc_scd2_bucketed(
@@ -1301,14 +1405,7 @@ def foreach_batch_cdc_scd2_bucketed(
         _recover_buckets(spark, target_path)
         if epoch_id <= _last_applied_epoch(spark, target_path):
             return  # at-least-once replay of an already-applied epoch
-        touched = sorted(
-            r["b"]
-            for r in batch_df.select(
-                bucket_expr(keys, n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
+        touched = _touched_buckets(batch_df, keys, n_buckets)
         if not touched:
             return  # empty epoch: dimension unchanged, ledger not advanced
         effective = _epoch_effective(batch_df, epoch_id, eff, event_time_col)
@@ -1334,34 +1431,9 @@ def foreach_batch_cdc_scd2_bucketed(
             order_cols=order_cols,
         )
         tmp = target_path.rstrip("/") + f"__cdcb_epoch{epoch_id}"
-        (
-            merged.withColumn("bucket", bucket_expr(keys, n_buckets))
-            .repartition(n_buckets, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp)
-        )
+        _write_buckets(merged, tmp, keys, n_buckets)
         _write_ledger(spark, tmp, epoch_id)
-        jvm = spark._jvm  # noqa: SLF001
-        conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-        P = jvm.org.apache.hadoop.fs.Path
-        fs = P(target_path).getFileSystem(conf)
-        root = target_path.rstrip("/")
-        for b in touched:
-            btmp = f"{tmp}/bucket={int(b)}"
-            if fs.exists(P(btmp)):  # a delete-only new key can leave none
-                _install(
-                    spark,
-                    btmp,
-                    f"{root}/bucket={int(b)}",
-                    prev_path=f"{root}__prevb/bucket={int(b)}",
-                )
-        _install(spark, f"{tmp}/_ledger", f"{root}/_ledger")
-        fs.delete(P(tmp), True)
-        # each bucket's _install cleaned its own park; after a crash-free
-        # epoch the park root is empty — remove it (a crash mid-loop never
-        # reaches this line, leaving the parks for the next recovery)
-        fs.delete(P(f"{root}__prevb"), True)
+        _catch_up_install(spark, tmp, target_path, touched)
 
     return _sink
 
@@ -1386,14 +1458,6 @@ _SEG_BLOOM_BITS_PER_KEY = 32
 _SEG_BLOOM_MIN_BITS = 1 << 17
 _SEG_BLOOM_MAX_BITS = 1 << 26
 _SEG_BLOOM_K = 5
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path-class) for `path` — any Hadoop scheme."""
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    P = jvm.org.apache.hadoop.fs.Path
-    return P(path).getFileSystem(conf), P
 
 
 def _write_text_sidecar(spark: SparkSession, path: str, text: str) -> None:
@@ -2822,40 +2886,14 @@ def foreach_batch_upsert_bucketed(
         spark = batch_df.sparkSession
         _recover_buckets(spark, target_path)
         batch = batch_df.dropDuplicates(keys)
-        touched = sorted(
-            r["b"]
-            for r in batch.select(bucket_expr(keys, n_buckets).alias("b"))
-            .distinct()
-            .collect()
-        )
+        touched = _touched_buckets(batch, keys, n_buckets)
         if not touched:
             return
         target_slice = _read_touched_buckets(spark, target_path, touched)
         merged = upsert_dataframe(target_slice, batch, keys)
         tmp = target_path.rstrip("/") + f"__upb_epoch{epoch_id}"
-        (
-            merged.withColumn("bucket", bucket_expr(keys, n_buckets))
-            .repartition(n_buckets, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp)
-        )
-        jvm = spark._jvm  # noqa: SLF001
-        conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-        P = jvm.org.apache.hadoop.fs.Path
-        fs = P(target_path).getFileSystem(conf)
-        root = target_path.rstrip("/")
-        for b in touched:
-            btmp = f"{tmp}/bucket={int(b)}"
-            if fs.exists(P(btmp)):
-                _install(
-                    spark,
-                    btmp,
-                    f"{root}/bucket={int(b)}",
-                    prev_path=f"{root}__prevb/bucket={int(b)}",
-                )
-        fs.delete(P(tmp), True)
-        fs.delete(P(f"{root}__prevb"), True)
+        _write_buckets(merged, tmp, keys, n_buckets)
+        _catch_up_install(spark, tmp, target_path, touched)
 
     return _sink
 
@@ -3371,28 +3409,10 @@ def foreach_batch_dedup_gate(
         _recover_parked(spark, f"{root}/accepted")
         fs, P = _hadoop_fs(spark, root)
         seg = f"{root}/accepted/seg_{int(epoch_id)}"
-
-        def store_slice(buckets: list[int]) -> DataFrame:
-            empty = spark.range(0).select(
-                F.lit("").alias("fp"),
-                F.lit(0).cast("bigint").alias("holder"),
-            )
-            # read the touched bucket dirs by EXPLICIT path — a
-            # partition-pruned read of the root would still LIST every
-            # bucket dir, making epoch cost grow with the layout constant
-            # (measured 2.2->8.1 s across a 64->1600-bucket sweep before
-            # this; O(touched) listing after)
-            paths = [
-                p
-                for p in (f"{fp_store}/bucket={int(b)}" for b in buckets)
-                if fs.exists(P(p))
-            ]
-            if not paths:
-                return empty  # store not yet materialized (or no targets)
-            # driver-side listing: 64 explicit paths would otherwise
-            # trip the parallel-discovery threshold and launch a
-            # 64-task listing job per slice read (round 12, guide §6)
-            return _read_parquet_driver_listed(spark, paths)
+        empty_fps = spark.range(0).select(
+            F.lit("").alias("fp"),
+            F.lit(0).cast("bigint").alias("holder"),
+        )
 
         touched_acc: list[int] | None = None
         if not fs.exists(P(seg)):
@@ -3411,17 +3431,12 @@ def foreach_batch_dedup_gate(
                 # ONE collect doubles as the empty-epoch probe (the
                 # separate isEmpty job is gone): no candidate buckets
                 # means an empty batch — no segment, nothing to publish
-                touched = sorted(
-                    r["b"]
-                    for r in cand.select(
-                        bucket_expr(["__fp"], n_buckets).alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                )
+                touched = _touched_buckets(cand, ["__fp"], n_buckets)
                 if not touched:
                     return
-                known = store_slice(touched).select(F.col("fp").alias("__fp"))
+                known = _read_touched_buckets(
+                    spark, fp_store, touched, empty_fps
+                ).select(F.col("fp").alias("__fp"))
                 accepted = cand.join(F.broadcast(known), "__fp", "left_anti")
                 tmp = f"{root}/__gate_epoch{int(epoch_id)}"
                 accepted.write.mode("overwrite").parquet(tmp)
@@ -3446,43 +3461,20 @@ def foreach_batch_dedup_gate(
         touched = (
             touched_acc
             if touched_acc is not None
-            else sorted(
-                r["b"]
-                for r in seg_fps.select(
-                    bucket_expr(["fp"], n_buckets).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
+            else _touched_buckets(seg_fps, ["fp"], n_buckets)
         )
         if not touched:
             return  # empty accepted set: membership unchanged
         merged = (
-            store_slice(touched)
+            _read_touched_buckets(spark, fp_store, touched, empty_fps)
             .unionByName(seg_fps)
             .groupBy("fp")
             .agg(F.min("holder").cast("bigint").alias("holder"))
         )
         tmp = f"{root}/__fps_epoch{int(epoch_id)}"
-        (
-            merged.withColumn("bucket", bucket_expr(["fp"], n_buckets))
-            .repartition(n_buckets, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp)
-        )
+        _write_buckets(merged, tmp, ["fp"], n_buckets)
         fs.mkdirs(P(fp_store))  # first fold: the store root may not exist
-        for b in touched:
-            btmp = f"{tmp}/bucket={int(b)}"
-            if fs.exists(P(btmp)):
-                _install(
-                    spark,
-                    btmp,
-                    f"{fp_store}/bucket={int(b)}",
-                    prev_path=f"{fp_store}__prevb/bucket={int(b)}",
-                )
-        fs.delete(P(tmp), True)
-        fs.delete(P(f"{fp_store}__prevb"), True)
+        _catch_up_install(spark, tmp, fp_store, touched)
 
     return _sink
 
@@ -3653,19 +3645,6 @@ def foreach_batch_neardup_gate(
         _recover_buckets(spark, sh_store)
         fs, P = _hadoop_fs(spark, root)
         seg = f"{root}/decided/seg_{int(epoch_id)}"
-
-        def slice_of(store: str, buckets: list[int], empty: DataFrame) -> DataFrame:
-            # explicit touched-bucket paths: no root listing (see the
-            # dedup gate's store_slice note)
-            paths = [
-                p
-                for p in (f"{store}/bucket={int(b)}" for b in buckets)
-                if fs.exists(P(p))
-            ]
-            if not paths:
-                return empty
-            return spark.read.parquet(*paths)
-
         empty_bands = spark.range(0).select(
             F.lit(0).alias("band"),
             F.lit(0).cast("bigint").alias("key"),
@@ -3692,15 +3671,10 @@ def foreach_batch_neardup_gate(
             sh_b = sh_b.localCheckpoint()  # reused 3x below; tiny per epoch
             bands_b = bands_b.localCheckpoint()
             computed = (sh_b, bands_b)
-            touched = sorted(
-                rr["b"]
-                for rr in bands_b.select(
-                    bucket_expr(["band", "key"], n_buckets).alias("b")
-                )
-                .distinct()
-                .collect()
+            touched = _touched_buckets(bands_b, ["band", "key"], n_buckets)
+            corp_bands = _read_touched_buckets(
+                spark, bands_store, touched, empty_bands
             )
-            corp_bands = slice_of(bands_store, touched, empty_bands)
             cross = (
                 bands_b.select(F.col(id_col), "band", "key")
                 .join(corp_bands, ["band", "key"])
@@ -3724,15 +3698,8 @@ def foreach_batch_neardup_gate(
             )
             # exact-Jaccard verify both candidate families
             a = sh_b.select(F.col(id_col), F.col("shingles").alias("sh_a"))
-            sh_buckets = sorted(
-                rr["b"]
-                for rr in cross.select(
-                    bucket_expr(["corpus_id"], n_buckets).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
-            corp_sh = slice_of(sh_store, sh_buckets, empty_sh)
+            sh_buckets = _touched_buckets(cross, ["corpus_id"], n_buckets)
+            corp_sh = _read_touched_buckets(spark, sh_store, sh_buckets, empty_sh)
             b_within = sh_b.select(
                 F.col(id_col).alias("corpus_id"), F.col("shingles").alias("sh_b")
             )
@@ -3778,44 +3745,25 @@ def foreach_batch_neardup_gate(
             F.col(id_col).cast("bigint").alias("corpus_id"),
             F.col("shingles").alias("sh_b"),
         )
-        for store, keys, rows, dedup_keys in (
-            (bands_store, ["band", "key"], band_rows, ["band", "key", "corpus_id"]),
-            (sh_store, ["corpus_id"], sh_rows, ["corpus_id"]),
+        for store, keys, rows, dedup_keys, empty in (
+            (
+                bands_store, ["band", "key"], band_rows,
+                ["band", "key", "corpus_id"], empty_bands,
+            ),
+            (sh_store, ["corpus_id"], sh_rows, ["corpus_id"], empty_sh),
         ):
-            touched = sorted(
-                rr["b"]
-                for rr in rows.select(bucket_expr(keys, n_buckets).alias("b"))
-                .distinct()
-                .collect()
-            )
+            touched = _touched_buckets(rows, keys, n_buckets)
             if not touched:
                 continue
-            empty = empty_bands if store == bands_store else empty_sh
             merged = (
-                slice_of(store, touched, empty)
+                _read_touched_buckets(spark, store, touched, empty)
                 .unionByName(rows)
                 .dropDuplicates(dedup_keys)
             )
             tmp = f"{store}__fold_epoch{int(epoch_id)}"
-            (
-                merged.withColumn("bucket", bucket_expr(keys, n_buckets))
-                .repartition(n_buckets, "bucket")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(tmp)
-            )
+            _write_buckets(merged, tmp, keys, n_buckets)
             fs.mkdirs(P(store))
-            for b in touched:
-                btmp = f"{tmp}/bucket={int(b)}"
-                if fs.exists(P(btmp)):
-                    _install(
-                        spark,
-                        btmp,
-                        f"{store}/bucket={int(b)}",
-                        prev_path=f"{store}__prevb/bucket={int(b)}",
-                    )
-            fs.delete(P(tmp), True)
-            fs.delete(P(f"{store}__prevb"), True)
+            _catch_up_install(spark, tmp, store, touched)
 
     return _sink
 
@@ -3979,20 +3927,8 @@ def read_weighted_relation_store_keyed(
             f"{horizon}: those epoch subdirs were folded away"
         )
     wanted = keys_df.select(*bucket_keys).distinct()
-    touched = sorted(
-        int(r["b"])
-        for r in wanted.select(
-            bucket_expr(bucket_keys, n_buckets).alias("b")
-        )
-        .distinct()
-        .collect()
-    )
-    fs, P = _hadoop_fs(spark, root)
-    paths = [
-        p
-        for p in (f"{root}/bucket={int(b)}" for b in touched)
-        if fs.exists(P(p))
-    ]
+    touched = _touched_buckets(wanted, bucket_keys, n_buckets)
+    paths = _existing_bucket_dirs(spark, root, touched)
     if not paths:
         # no requested key has ever landed: typed empty relation
         return served_relation(
@@ -4099,8 +4035,8 @@ def foreach_batch_join_relation_retract_maintain(
     LSM shape (append cheap, compaction amortized), which is what a
     100 TB view with per-row grain needs.
 
-    Crash protocol — the shared manifest-rollback idiom
-    (`_rollback_or_commit_wagg`, ADVICE r9), specialized to appends:
+    Crash protocol — the shared park-until-ledger rollback
+    (`_park_until_ledger_commit`, ADVICE r9), specialized to appends:
     appends are ADDITIVE (a replayed epoch would double its rows), so
     (1) the epoch's subdirs, new ledger, and an `_inflight` manifest
     (epoch, bucket, existed-pre-epoch) fully materialize at a scratch
@@ -4150,8 +4086,9 @@ def _relation_append(
     epoch_id: int,
 ) -> None:
     """Install one epoch's netted weighted changelog as
-    `bucket=K/epoch=E/` subdirs under the manifest-rollback protocol
-    documented on `foreach_batch_join_relation_retract_maintain`.
+    `bucket=K/epoch=E/` subdirs under the park-until-ledger rollback
+    (`_park_until_ledger_commit`) documented on
+    `foreach_batch_join_relation_retract_maintain`.
     Caller contract: the ledger gate has passed and
     `_rollback_or_commit_relation` has run (no park roots exist)."""
     root = target_path.rstrip("/")
@@ -4177,31 +4114,35 @@ def _relation_append(
     if not touched:
         fs.delete(P(tmp), True)
         return  # empty / fully self-cancelling epoch: state unchanged
-    _write_ledger(spark, tmp, epoch_id)
-    # rewind record: the epoch, its touched buckets, and which existed
-    # pre-epoch (existed=false buckets are unbirthed on rollback).
-    _write_inflight_manifest(spark, fs, P, tmp, root, epoch_id, touched)
-    fs.mkdirs(P(root + "__relprev"))
-    # mutation-begins marker: one atomic rename; recovery treats a park
-    # root WITHOUT this manifest as "nothing moved yet"
-    _rename_or_raise(fs, P(f"{tmp}/_inflight"), P(root + "__relprev/_inflight"))
-    for b in touched:
-        live = P(f"{root}/bucket={int(b)}")
-        if not fs.exists(live):
-            fs.mkdirs(live)  # born this epoch; manifest records unbirth
-        _rename_or_raise(
-            fs,
-            P(f"{tmp}/bucket={int(b)}/epoch={int(epoch_id)}"),
-            P(f"{root}/bucket={int(b)}/epoch={int(epoch_id)}"),
-        )
-    _install(spark, f"{tmp}/_ledger", f"{root}/_ledger")  # commit point
-    fs.delete(P(root + "__relprev"), True)
-    fs.delete(P(tmp), True)
+    _park_until_ledger_commit(
+        spark, target_path, tmp, "__relprev", epoch_id, touched, _relation_move
+    )
+
+
+def _relation_move(fs, P, root: str, tmp: str, epoch_id: int, b: int) -> None:
+    """Relation-store bucket move: rename the epoch's `epoch=E` subdir
+    into its live bucket (created if the bucket is born this epoch)."""
+    live = P(f"{root}/bucket={b}")
+    if not fs.exists(live):
+        fs.mkdirs(live)  # born this epoch; manifest records unbirth
+    _rename_or_raise(
+        fs,
+        P(f"{tmp}/bucket={b}/epoch={epoch_id}"),
+        P(f"{root}/bucket={b}/epoch={epoch_id}"),
+    )
+
+
+def _relation_rewind(fs, P, root: str, epoch: int, b: int) -> None:
+    """Relation-store rewind of a bucket that existed pre-epoch: delete
+    the epoch's half-installed `epoch=E` subdir."""
+    sub = P(f"{root}/bucket={b}/epoch={epoch}")
+    if fs.exists(sub):
+        fs.delete(sub, True)
 
 
 def _rollback_or_commit_relation(spark: SparkSession, target_path: str) -> None:
-    """Recovery for the epoch-append relation store — the
-    `_rollback_or_commit_wagg` protocol specialized to appends, plus the
+    """Recovery for the epoch-append relation store —
+    `_park_until_ledger_recover` over the `__relprev` park root, plus the
     always-rewind branch for a crashed compaction:
 
       - compaction park root (`__relcprev`): compaction never advances
@@ -4232,28 +4173,13 @@ def _rollback_or_commit_relation(spark: SparkSession, target_path: str) -> None:
                 fs.delete(live, True)  # half-installed replacement
             _rename_or_raise(fs, st.getPath(), live)
         fs.delete(cprev, True)
-    prev_root = P(root + "__relprev")
-    if fs.exists(prev_root):
-        inflight = root + "__relprev/_inflight"
-        if fs.exists(P(inflight)):
-            rows = _read_inflight_manifest(spark, fs, P, inflight)
-            epoch = int(rows[0]["epoch"])
-            if epoch > _last_applied_epoch(spark, target_path):
-                for r in rows:
-                    b = int(r["bucket"])
-                    if bool(r["existed"]):
-                        sub = P(f"{root}/bucket={b}/epoch={epoch}")
-                        if fs.exists(sub):
-                            fs.delete(sub, True)
-                    else:
-                        live = P(f"{root}/bucket={b}")
-                        if fs.exists(live):
-                            fs.delete(live, True)  # born this epoch
-        fs.delete(prev_root, True)
-    for pat in ("__rel_epoch*", "__relcompact"):
-        stale = fs.globStatus(P(root + pat))
-        for st in list(stale) if stale is not None else []:
-            fs.delete(st.getPath(), True)
+    _park_until_ledger_recover(
+        spark,
+        target_path,
+        "__relprev",
+        _relation_rewind,
+        ("__rel_epoch*", "__relcompact"),
+    )
 
 
 def _relation_compacted_through(spark: SparkSession, root: str) -> int:

@@ -388,6 +388,67 @@ class _CrashingFS:
         return getattr(self._fs, name)
 
 
+def test_install_crash_at_each_own_fs_op_keeps_a_complete_ledger(
+    spark, tmp_path, monkeypatch
+):
+    """`_install` runs its filesystem ops through `_hadoop_fs`, so a crash
+    injected there ALONE (`_install` itself unpatched) lands after every
+    prefix of its own mutations. Over a text `_ledger` target each prefix
+    must leave `_last_applied_epoch` reading the complete old or the
+    complete new epoch, and a clean retry must converge with no `__prev`
+    park left. Driver-side text files only: no Spark job."""
+    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
+
+    real_hfs = pl._hadoop_fs
+    crashes = 0
+    crash_after = 0
+    while True:
+        root = str(tmp_path / f"crash{crash_after}")
+        scratch = root + "__next"
+        pl._write_ledger(spark, root, 3)  # old epoch
+        pl._write_ledger(spark, scratch, 4)  # new epoch, ready to install
+        budget = [crash_after]
+        monkeypatch.setattr(
+            pl,
+            "_hadoop_fs",
+            lambda s, p, _b=budget: (_CrashingFS(real_hfs(s, p)[0], _b), real_hfs(s, p)[1]),
+        )
+        try:
+            pl._install(spark, f"{scratch}/_ledger", f"{root}/_ledger")
+            completed = True
+        except _CrashNow:
+            completed = False
+            crashes += 1
+        finally:
+            monkeypatch.setattr(pl, "_hadoop_fs", real_hfs)
+        got = pl._last_applied_epoch(spark, root)
+        assert got in (3, 4), f"crash point {crash_after}: ledger reads {got}"
+        if completed:
+            assert got == 4
+        # a replayed epoch rebuilds its scratch, then installs cleanly
+        if not os.path.exists(f"{scratch}/_ledger"):
+            pl._write_ledger(spark, scratch, 4)
+        pl._install(spark, f"{scratch}/_ledger", f"{root}/_ledger")
+        assert pl._last_applied_epoch(spark, root) == 4
+        assert not os.path.exists(f"{root}/_ledger__prev")
+        if completed:
+            break
+        crash_after += 1
+    # mkdirs(park parent), park rename, swap rename, park delete
+    assert crashes == 4
+
+
+def test_pipeline_opens_filesystems_only_through_hadoop_fs():
+    """Every store filesystem op goes through `_hadoop_fs` — the one point
+    where crash injection (`_CrashingFS`) sees every mutation."""
+    import inspect
+
+    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
+
+    assert inspect.getsource(pl).count("getFileSystem(") == 1
+    assert "getFileSystem(" in inspect.getsource(pl._hadoop_fs)
+
+
 @pytest.mark.slow
 def test_wagg_bucketed_crash_at_every_fs_op_is_recoverable(
     spark, tmp_path, monkeypatch
