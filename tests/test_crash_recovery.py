@@ -655,3 +655,263 @@ def test_wagg_bucketed_rollback_itself_is_reentrant(spark, tmp_path, monkeypatch
         assert got == want, f"rollback crash point {rollback_crash}"
         if second_completed:
             break
+
+
+# ------------- segment-store epoch protocol: mutation traces per sink --
+
+
+class _RecordingFS:
+    """Proxy over the Hadoop FileSystem that records every MUTATING op
+    (the ones `_CrashingFS` counts: mkdirs, rename, delete) with each path
+    relative to `base`, and never crashes."""
+
+    def __init__(self, fs, log, base):
+        self._fs = fs
+        self._log = log
+        self._base = base.rstrip("/") + "/"
+
+    def _rel(self, path):
+        return str(path.toString()).split(self._base, 1)[-1]
+
+    def rename(self, src, dst):
+        self._log.append(("rename", self._rel(src), self._rel(dst)))
+        return self._fs.rename(src, dst)
+
+    def delete(self, path, recursive=True):
+        self._log.append(("delete", self._rel(path)))
+        return self._fs.delete(path, recursive)
+
+    def mkdirs(self, path):
+        self._log.append(("mkdirs", self._rel(path)))
+        return self._fs.mkdirs(path)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def _recorded(monkeypatch, base, run):
+    """The mutating fs ops `run()` makes, in order."""
+    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
+
+    real_hfs = pl._hadoop_fs
+    log: list = []
+
+    def recording(s, p):
+        fs, P = real_hfs(s, p)
+        return _RecordingFS(fs, log, str(base)), P
+
+    monkeypatch.setattr(pl, "_hadoop_fs", recording)
+    try:
+        run()
+    finally:
+        monkeypatch.setattr(pl, "_hadoop_fs", real_hfs)
+    return log
+
+
+def _manifest_commit(segs):
+    # `_write_manifest`'s two-rename `_install` over a live `_manifest`
+    return [
+        ("mkdirs", segs),
+        ("rename", f"{segs}/_manifest", f"{segs}/_manifest__prev"),
+        ("rename", f"{segs}/__manifest_next", f"{segs}/_manifest"),
+        ("delete", f"{segs}/_manifest__prev"),
+    ]
+
+
+def _publish(scratch, segs, epoch):
+    return [
+        ("mkdirs", segs),
+        ("rename", scratch, f"{segs}/seg_{epoch}"),
+        *_manifest_commit(segs),
+    ]
+
+
+def _join_view_fixture(spark, tmp_path, name):
+    """A manifest-mode join view (seg_base + one-line manifest) over a
+    three-key dimension, and a fact-batch builder."""
+    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
+
+    dim_path = str(tmp_path / f"{name}_dim")
+    spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "k long, attr string"
+    ).write.parquet(dim_path)
+    view = str(tmp_path / name)
+    spark.createDataFrame(
+        [(10, 1, "a")], "fid long, k long, attr string"
+    ).write.parquet(f"{view}/segs/seg_base")
+    pl._write_manifest(spark, f"{view}/segs", ["seg_base"])
+    facts = lambda rows: spark.createDataFrame(rows, "fid long, k long")  # noqa: E731
+    return view, dim_path, facts
+
+
+def test_segment_publishers_record_their_exact_mutation_sequence(
+    spark, tmp_path, monkeypatch
+):
+    """One published epoch of each of the six segment publishers makes
+    exactly this sequence of mutating fs ops (recorded at `_hadoop_fs`,
+    the one choke point), and a redelivered epoch makes none on the four
+    manifest maintainers — the publish order every crash argument of the
+    segment-store protocol rests on."""
+    from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
+        foreach_batch_bm25_maintain_segmented,
+        foreach_batch_dedup_gate,
+        foreach_batch_ivf_pq_maintain_segmented,
+        foreach_batch_join_view_maintain,
+        foreach_batch_join_view_scd2_maintain,
+        foreach_batch_neardup_gate,
+        seed_bm25_index_segmented,
+        seed_ivf_pq_index_segmented,
+    )
+
+    def rec(run):
+        return _recorded(monkeypatch, tmp_path, run)
+
+    docs = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")  # noqa: E731
+
+    # BM25 (seeded: manifest mode)
+    seed_bm25_index_segmented(docs([(1, "base doc words")]), str(tmp_path / "bm25"))
+    bm25 = foreach_batch_bm25_maintain_segmented(str(tmp_path / "bm25"))
+    epoch = docs([(2, "epoch doc words")])
+    assert rec(lambda: bm25(epoch, 0)) == _publish(
+        "bm25/__seg_epoch0", "bm25/segs", 0
+    )
+    assert rec(lambda: bm25(epoch, 0)) == []
+
+    # IVF-PQ (seeded: manifest mode)
+    emb = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
+        F.col("id").alias("vec_id"),
+        F.transform(
+            F.sequence(F.lit(1), F.lit(8)),
+            lambda i: ((F.col("id") * 37 + i * 11) % 19 - 9.0) / 3.0,
+        ).alias("embedding"),
+    )
+    seed_ivf_pq_index_segmented(
+        emb(20, 60), str(tmp_path / "ivf"), n_probe=2, km_k=4, km_iter=1,
+        m_subspaces=4, k_centroids=4, pq_iter=1, dim=8,
+    )
+    ivf = foreach_batch_ivf_pq_maintain_segmented(
+        str(tmp_path / "ivf"), m_subspaces=4, dim=8
+    )
+    assert rec(lambda: ivf(emb(0, 20), 0)) == _publish(
+        "ivf/__ivfseg_epoch0", "ivf/segs", 0
+    )
+    assert rec(lambda: ivf(emb(0, 20), 0)) == []
+
+    # join view
+    view, dim_path, facts = _join_view_fixture(spark, tmp_path, "jv")
+    jv = foreach_batch_join_view_maintain(
+        view, dim_path, fact_key="k", dim_key="k", dim_cols=["attr"]
+    )
+    assert rec(lambda: jv(facts([(11, 2), (12, 3)]), 0)) == _publish(
+        "jv/__jv_epoch0", "jv/segs", 0
+    )
+    assert rec(lambda: jv(facts([(11, 2), (12, 3)]), 0)) == []
+
+    # SCD2 join view
+    dim2 = str(tmp_path / "scd2dim")
+    spark.createDataFrame([(1, "a"), (2, "b")], "k long, attr string").select(
+        "k", "attr",
+        F.lit("2020-01-01").cast("timestamp").alias("valid_from"),
+        F.lit(None).cast("timestamp").alias("valid_to"),
+    ).write.parquet(dim2)
+    view2, _, _ = _join_view_fixture(spark, tmp_path, "jv2")
+    facts2 = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "fid long, k long, ts string"
+    ).select("fid", "k", F.col("ts").cast("timestamp").alias("ts"))
+    jv2 = foreach_batch_join_view_scd2_maintain(
+        view2, dim2, fact_key="k", dim_key="k",
+        dim_cols=["attr"], event_time_col="ts",
+    )
+    b2 = facts2([(11, 1, "2023-01-01"), (12, 2, "2023-06-01")])
+    assert rec(lambda: jv2(b2, 0)) == _publish("jv2/__jv2_epoch0", "jv2/segs", 0)
+    assert rec(lambda: jv2(b2, 0)) == []
+
+    # dedup gate (fresh store): publish, then the fold
+    gate = foreach_batch_dedup_gate(str(tmp_path / "gate"), n_buckets=2)
+    assert rec(lambda: gate(docs([(1, "alpha beta"), (2, "gamma")]), 0)) == [
+        ("mkdirs", "gate/accepted"),
+        ("rename", "gate/__gate_epoch0", "gate/accepted/seg_0"),
+        ("mkdirs", "gate/fps"),
+        ("rename", "gate/__fps_epoch0/bucket=0", "gate/fps/bucket=0"),
+        ("rename", "gate/__fps_epoch0/bucket=1", "gate/fps/bucket=1"),
+        ("delete", "gate/__fps_epoch0"),
+        ("delete", "gate/fps__prevb"),
+    ]
+
+    # neardup gate (fresh store): publish, then both folds
+    nd = foreach_batch_neardup_gate(str(tmp_path / "nd"), n_buckets=2)
+    nd_batch = docs([(1, "the quick brown fox"), (2, "lazy dog")])
+    assert rec(lambda: nd(nd_batch, 0)) == [
+        ("mkdirs", "nd/decided"),
+        ("rename", "nd/__gate_epoch0", "nd/decided/seg_0"),
+        ("mkdirs", "nd/bands"),
+        ("rename", "nd/bands__fold_epoch0/bucket=0", "nd/bands/bucket=0"),
+        ("rename", "nd/bands__fold_epoch0/bucket=1", "nd/bands/bucket=1"),
+        ("delete", "nd/bands__fold_epoch0"),
+        ("delete", "nd/bands__prevb"),
+        ("mkdirs", "nd/sh"),
+        ("rename", "nd/sh__fold_epoch0/bucket=0", "nd/sh/bucket=0"),
+        ("delete", "nd/sh__fold_epoch0"),
+        ("delete", "nd/sh__prevb"),
+    ]
+
+
+def test_join_view_reader_at_every_fs_op_of_segment_publish(
+    spark, tmp_path, monkeypatch
+):
+    """A crash injected at `_hadoop_fs` alone after every prefix of a join
+    view epoch's mutations (the publish rename, then the manifest commit):
+    before any recovery the manifest-resolved read serves exactly the
+    pre-epoch or the post-epoch rows, and the epoch's replay then lands
+    it exactly once."""
+    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
+    from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
+        foreach_batch_join_view_maintain,
+        read_join_view_segments,
+    )
+
+    def rows(view):
+        return sorted(
+            tuple(r)
+            for r in read_join_view_segments(spark, view)
+            .select("fid", "k", "attr")
+            .collect()
+        )
+
+    want_pre = [(10, 1, "a")]
+    want_post = [(10, 1, "a"), (11, 2, "b"), (12, 3, "c")]
+    real_hfs = pl._hadoop_fs
+    crashes = 0
+    crash_after = 0
+    while True:
+        view, dim_path, facts = _join_view_fixture(
+            spark, tmp_path, f"jv{crash_after}"
+        )
+        sink = foreach_batch_join_view_maintain(
+            view, dim_path, fact_key="k", dim_key="k", dim_cols=["attr"]
+        )
+        budget = [crash_after]
+        monkeypatch.setattr(
+            pl,
+            "_hadoop_fs",
+            lambda s, p, _b=budget: (_CrashingFS(real_hfs(s, p)[0], _b), real_hfs(s, p)[1]),
+        )
+        try:
+            sink(facts([(11, 2), (12, 3)]), 0)
+            completed = True
+        except _CrashNow:
+            completed = False
+            crashes += 1
+        finally:
+            monkeypatch.setattr(pl, "_hadoop_fs", real_hfs)
+        got = rows(view)
+        assert got in (want_pre, want_post), f"torn read at prefix {crash_after}"
+        if completed:
+            assert got == want_post
+        sink(facts([(11, 2), (12, 3)]), 0)
+        assert rows(view) == want_post, f"prefix {crash_after}"
+        if completed:
+            break
+        crash_after += 1
+    # at least the publish rename and the manifest commit
+    assert crashes >= 2
