@@ -29,6 +29,8 @@ stays exact).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1440,6 +1442,30 @@ def foreach_batch_cdc_scd2_bucketed(
 
 # --- segment-store protocol (shared by the BM25 / IVF-PQ / join-view
 # --- segmented maintainers) ------------------------------------------------
+#
+# One epoch of a segment store runs these steps, in this order:
+#   1. restore a `segs/` parked by a crashed compaction swap
+#      (`_segment_epoch_applied`, via `_recover_parked`);
+#   2. the replay gate (`_segment_replay_applied`, called only from
+#      `_segment_epoch_applied`): the epoch is applied iff it is at/below
+#      the compaction marker, checked FIRST, or its `seg_<epoch>` dir is
+#      present, in which case the manifest is repaired to list it;
+#   3. build the segment at a scratch dir — the sink's own work; the BM25
+#      and IVF-PQ families first prove the delta disjoint from the store
+#      (`_raise_if_indexed`), then write through their one segment writer
+#      (`_write_bm25_segment`, `_write_ivf_segment`);
+#   4. the publish rename of the scratch dir to `seg_<epoch>`
+#      (`_publish_segment`);
+#   5. the manifest commit (`_manifest_add`, inside `_publish_segment`);
+#   6. optional tiered compaction once `compact_every` segments are live
+#      (`_publish_segment`, with the family's compactor).
+# The four maintainers (BM25, IVF-PQ, join view, SCD2 join view) run all
+# six steps. The dedup and neardup gates share only steps 4-5: they
+# publish their decision segment first and then fold it, so their replay
+# safety is the publish-then-fold algebra, not the gate; their
+# `accepted/` and `decided/` dirs have no manifest, so step 5 does
+# nothing there. Seeds and compactions write through the same family
+# writers; the two seeds end with `_seed_segment_catalog`.
 
 # Per-segment id-presence Bloom bitmap sizing: each bitmap is sized to ITS
 # segment's cardinality (32 bits/key, k=5 → ~6e-5 false-positive rate per
@@ -1602,18 +1628,13 @@ def _live_segments(spark: SparkSession, segs_dir: str) -> list[str]:
     )
 
 
-_SEG_NAME_RE = None  # compiled lazily below
+_SEG_NAME_RE = re.compile(r"seg_m?(\d+)(?:_\d+)?")
 
 
 def _seg_epoch(name: str) -> int:
     """The epoch a segment name carries: seg_<e> (a published epoch) or
     seg_m<e>[_k] (a tiered merge covering epochs ≤ e); -1 for seg_base /
     unparseable."""
-    import re
-
-    global _SEG_NAME_RE
-    if _SEG_NAME_RE is None:
-        _SEG_NAME_RE = re.compile(r"seg_m?(\d+)(?:_\d+)?")
     m = _SEG_NAME_RE.fullmatch(name)
     return int(m.group(1)) if m else -1
 
@@ -1630,10 +1651,16 @@ def _compacted_through(spark: SparkSession, root: str) -> int:
     an at-least-once replay of a merged-away epoch would miss the
     presence probe, hit the disjointness guard (its ids ARE indexed), and
     permanently fail the stream on an epoch that needs skipping, not
-    raising (ADVICE r8 #3). -1 when no compaction has run. Resolves the
-    marker through `_store_path` (it has its own two-rename install)."""
-    fs, P = _hadoop_fs(spark, root)
-    marker = _store_path(spark, f"{root}/compaction_marker")
+    raising (ADVICE r8 #3). -1 when no compaction has run."""
+    return _read_compaction_marker(spark, f"{root}/compaction_marker")
+
+
+def _read_compaction_marker(spark: SparkSession, path: str) -> int:
+    """The epoch a compaction marker at `path` records, -1 when absent.
+    Resolves the marker through `_store_path` (it has its own two-rename
+    install)."""
+    fs, P = _hadoop_fs(spark, path)
+    marker = _store_path(spark, path)
     if not fs.exists(P(marker)):
         return -1
     if fs.getFileStatus(P(marker)).isFile():
@@ -2343,9 +2370,7 @@ def _bloom_suspect_segments(
     return sorted(r["__seg"] for r in hits)
 
 
-def _segment_replay_applied(
-    spark: SparkSession, root: str, epoch_id: int, fs, P
-) -> bool:
+def _segment_replay_applied(spark: SparkSession, root: str, epoch_id: int) -> bool:
     """The segmented stores' replay gate: epoch applied iff it is
     at/below the compaction marker (segment merged away — still applied)
     OR its segment dir exists. Marker FIRST: a merged-away orphan dir
@@ -2357,11 +2382,89 @@ def _segment_replay_applied(
     complete). No-op on glob-mode stores."""
     if epoch_id <= _compacted_through(spark, root):
         return True
+    fs, P = _hadoop_fs(spark, root)
     seg_name = f"seg_{int(epoch_id)}"
     if fs.exists(P(f"{root}/segs/{seg_name}")):
         _manifest_add(spark, f"{root}/segs", seg_name)
         return True
     return False
+
+
+def _segment_epoch_applied(spark: SparkSession, root: str, epoch_id: int) -> bool:
+    """The maintainers' epoch prologue (steps 1-2 of the protocol above):
+    restore a `segs/` a compaction crash parked — BEFORE probing or
+    publishing, since publishing into a fresh `segs/` while the real one
+    sits parked would fork the store — then ask the replay gate. True
+    means the epoch is already applied (a live segment, or compacted
+    away) and the sink returns."""
+    _recover_parked(spark, f"{root}/segs")
+    return _segment_replay_applied(spark, root, epoch_id)
+
+
+def _publish_segment(
+    spark: SparkSession,
+    scratch: str,
+    root: str,
+    epoch_id: int,
+    sub: str = "segs",
+    compactor=None,
+    compact_every: int | None = None,
+) -> None:
+    """Publish the complete segment at `scratch` as `<root>/<sub>/seg_<epoch>`
+    (steps 4-6 of the protocol above): one rename makes it present but
+    invisible, the manifest commit makes it visible (nothing on a
+    manifest-less dir), then `compactor(spark, root, tiered=True)` runs
+    once `compact_every` segments are live."""
+    segs_dir = f"{root}/{sub}"
+    name = f"seg_{int(epoch_id)}"
+    fs, P = _hadoop_fs(spark, segs_dir)
+    fs.mkdirs(P(segs_dir))
+    _rename_or_raise(fs, P(scratch), P(f"{segs_dir}/{name}"))
+    _manifest_add(spark, segs_dir, name)
+    if compact_every and len(_live_segments(spark, segs_dir)) >= compact_every:
+        # tiered: the giant base is never rewritten to absorb a few
+        # epochs — amortized O(delta · tiers), not O(index/interval)
+        compactor(spark, root, tiered=True)
+
+
+def _raise_if_indexed(
+    spark: SparkSession,
+    root: str,
+    ids: DataFrame,
+    table: str,
+    label: str,
+    delta_range: tuple,
+) -> None:
+    """The BM25 / IVF-PQ disjointness check of the delta's one-column
+    `ids` (named as the store's id column; `delta_range` its min/max):
+    the bloom probe (`_bloom_suspect_segments`) proves most deltas
+    disjoint with no table read; on a bloom hit, exact-confirm against
+    ONLY the suspect segments' `table` (the whole live union on a legacy
+    store) and raise when a delta id is already indexed."""
+    segs_dir = _store_path(spark, f"{root}/segs")
+    id_col = ids.columns[0]
+    delta_ids = ids.distinct()
+    suspects = _bloom_suspect_segments(
+        spark, segs_dir, delta_ids, id_col, delta_range=delta_range
+    )
+    if suspects == []:
+        return
+    stored = (
+        spark.read.parquet(*[f"{segs_dir}/{s}/{table}" for s in suspects])
+        if suspects is not None
+        else _read_segment_table(spark, segs_dir, table)
+    )
+    dup = (
+        stored.join(F.broadcast(delta_ids), id_col, "left_semi")
+        .limit(1)
+        .collect()
+    )
+    if dup:
+        raise ValueError(
+            f"{label} segmented maintain: {id_col} {dup[0][id_col]!r} is "
+            "already indexed; appends must be disjoint from the stored "
+            "index"
+        )
 
 
 def _gc_orphan_segments(spark: SparkSession, root: str) -> None:
@@ -2559,12 +2662,7 @@ def foreach_batch_bm25_maintain_segmented(
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         root = index_dir.rstrip("/")
-        # a crash inside a compaction's swap window parks segs/ whole;
-        # restore BEFORE probing or publishing (publishing into a fresh
-        # segs/ while the real one is parked would fork the store)
-        _recover_parked(spark, f"{root}/segs")
-        fs, P = _hadoop_fs(spark, root)
-        if _segment_replay_applied(spark, root, epoch_id, fs, P):
+        if _segment_epoch_applied(spark, root, epoch_id):
             return  # at-least-once replay: live segment or compacted away
         # ONE delta aggregate replaces the separate isEmpty probe, the
         # bloom tier-1 min/max job, the bloom-sizing count, and the
@@ -2580,49 +2678,34 @@ def foreach_batch_bm25_maintain_segmented(
         n_delta = int(d["n"])
         if n_delta == 0:
             return  # empty epoch: no segment, nothing to publish
-        delta_ids = batch_df.select(F.col(id_col).alias("doc_id")).distinct()
-        segs = _store_path(spark, f"{root}/segs")
-        suspects = _bloom_suspect_segments(
-            spark, segs, delta_ids, "doc_id", delta_range=(d["lo"], d["hi"])
+        _raise_if_indexed(
+            spark,
+            root,
+            batch_df.select(F.col(id_col).alias("doc_id")),
+            "doclens",
+            "bm25",
+            (d["lo"], d["hi"]),
         )
-        if suspects != []:
-            # bloom hit or legacy store: exact-confirm against ONLY the
-            # suspect segments' doclens (the full union when legacy)
-            doclens = (
-                spark.read.parquet(*[f"{segs}/{s}/doclens" for s in suspects])
-                if suspects is not None
-                else read_bm25_index_segmented(spark, index_dir)[1]
-            )
-            dup = (
-                doclens.join(F.broadcast(delta_ids), "doc_id", "left_semi")
-                .limit(1)
-                .collect()
-            )
-            if dup:
-                raise ValueError(
-                    f"bm25 segmented maintain: doc_id {dup[0]['doc_id']!r} is "
-                    "already indexed; appends must be disjoint from the stored "
-                    "index"
-                )
         p_new, l_new, _ = bm25_index_build(batch_df, id_col, text_col)
         tmp = f"{root}/__seg_epoch{int(epoch_id)}"
-        _write_sorted_postings(p_new, f"{tmp}/postings", n_delta)
-        l_new.write.mode("overwrite").parquet(f"{tmp}/doclens")
-        # bloom over the doclens projection: doc_id-only, so column
-        # pruning drops the tokenize; sizing stats come from the delta
-        # aggregate above (no second stats job)
-        _write_segment_bloom(
-            l_new, "doc_id", tmp, stats=(n_delta, d["lo"], d["hi"])
+        # the bloom runs over the doclens projection (doc_id-only, so
+        # column pruning drops the tokenize); sizing stats come from the
+        # delta aggregate above (no second stats job)
+        _write_bm25_segment(
+            spark,
+            tmp,
+            p_new,
+            l_new,
+            stats=(n_delta, d["lo"], d["hi"], int(d["sl"] or 0)),
         )
-        _write_bm25_seg_stats(spark, tmp, n_delta, int(d["sl"] or 0))
-        seg = P(f"{root}/segs/seg_{int(epoch_id)}")
-        fs.mkdirs(seg.getParent())
-        _rename_or_raise(fs, P(tmp), seg)  # publish (invisible until listed)
-        _manifest_add(spark, f"{root}/segs", f"seg_{int(epoch_id)}")
-        if compact_every and len(_live_segments(spark, f"{root}/segs")) >= compact_every:
-            # tiered: the giant base is never rewritten to absorb a few
-            # epochs — amortized O(delta · tiers), not O(index/interval)
-            compact_bm25_segments(spark, index_dir, tiered=True)
+        _publish_segment(
+            spark,
+            tmp,
+            root,
+            epoch_id,
+            compactor=compact_bm25_segments,
+            compact_every=compact_every,
+        )
 
     return _sink
 
@@ -2691,12 +2774,8 @@ def read_bm25_index_segmented_at(spark: SparkSession, index_dir: str, epoch: int
     root = index_dir.rstrip("/")
     segs = _store_path(spark, f"{root}/segs")
     names = _segments_as_of(spark, root, epoch)
-    if names:
-        postings = _read_segment_table(spark, segs, "postings", names)
-        doclens = _read_segment_table(spark, segs, "doclens", names)
-    else:  # nothing existed yet at `epoch`: typed empty index
-        postings = _read_segment_table(spark, segs, "postings").limit(0)
-        doclens = _read_segment_table(spark, segs, "doclens").limit(0)
+    postings = _read_segment_table(spark, segs, "postings", names)
+    doclens = _read_segment_table(spark, segs, "doclens", names)
     # prefix stats from the named segments' `_stats` sidecars when
     # available (round 12) — the union-aggregate recompute was the bulk
     # of this serve's per-execution job count
@@ -2718,17 +2797,11 @@ def read_ivf_pq_index_segmented_at(
     root = _store_path(spark, index_dir.rstrip("/"))
     segs = _store_path(spark, f"{root}/segs")
     names = _segments_as_of(spark, root, epoch)
-    if names:
-        lists = _read_segment_table(spark, segs, "lists", names)
-        codes = _read_segment_table(spark, segs, "codes", names)
-    else:
-        lists = _read_segment_table(spark, segs, "lists").limit(0)
-        codes = _read_segment_table(spark, segs, "codes").limit(0)
     return {
         "centroids": spark.read.parquet(f"{root}/centroids"),
         "codebook": spark.read.parquet(f"{root}/codebook"),
-        "lists": lists,
-        "codes": codes,
+        "lists": _read_segment_table(spark, segs, "lists", names),
+        "codes": _read_segment_table(spark, segs, "codes", names),
     }
 
 
@@ -2744,8 +2817,6 @@ def read_join_view_segments_at(
     root = view_dir.rstrip("/")
     segs = _store_path(spark, f"{root}/segs")
     names = _segments_as_of(spark, root, epoch)
-    if not names:
-        return _read_segment_table(spark, segs, None).limit(0)
     return _read_segment_table(spark, segs, None, names)
 
 
@@ -2756,13 +2827,64 @@ def _read_segment_table(
     manifest-listed set when the store has one (orphans excluded — the
     no-double-count contract), the directory glob otherwise. `table` is
     the subdir inside each segment (None for flat segment dirs); `names`
-    narrows to a subset (compaction's merge set)."""
+    narrows to a subset (compaction's merge set, an as-of read's catalog
+    walk). An empty `names` — an as-of read before anything existed —
+    yields the table's typed empty frame."""
+    if names == []:
+        return _read_segment_table(spark, segs_dir, table).limit(0)
     if names is None:
         names = _manifest_segments(spark, segs_dir)
     sub = f"/{table}" if table else ""
     if names is None:
         return spark.read.parquet(f"{segs_dir}/*{sub}")
     return spark.read.parquet(*[f"{segs_dir}/{n}{sub}" for n in names])
+
+
+def _write_bm25_segment(
+    spark: SparkSession,
+    seg_dir: str,
+    postings: DataFrame,
+    doclens: DataFrame,
+    stats: tuple[int, object, object, int] | None = None,
+) -> DataFrame:
+    """The one BM25 segment writer (seed, per-epoch publish, compaction):
+    doclens, then the id bloom, the `_stats` sidecar and the term-sorted
+    postings. Doclens go first because one aggregate over them — `stats`
+    = (n_docs, id_min, id_max, sum_len) — sizes the bloom, fills `_stats`
+    AND picks the postings layout (a segment under _SMALL_SEG_DOCS writes
+    one sorted file; repartitionByRange on a small table fans it across
+    shuffle-partition-count KB-sized files, and every serve then pays a
+    one-task-per-file scan; guide §6 small files). Without `stats` the
+    aggregate runs over the written doclens read back, and the bloom is
+    built from that read-back; a caller that already aggregated its
+    delta passes `stats` and the bloom reads `doclens` as given. Returns
+    the doclens the bloom was built from."""
+    doclens.write.mode("overwrite").parquet(f"{seg_dir}/doclens")
+    if stats is None:
+        doclens = spark.read.parquet(f"{seg_dir}/doclens")
+        row = doclens.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("doc_id").alias("lo"),
+            F.max("doc_id").alias("hi"),
+            F.sum("len").alias("sl"),
+        ).collect()[0]
+        stats = (int(row["n"]), row["lo"], row["hi"], int(row["sl"] or 0))
+    n_docs = int(stats[0])
+    _write_segment_bloom(doclens, "doc_id", seg_dir, stats=stats[:3])
+    _write_bm25_seg_stats(spark, seg_dir, n_docs, stats[3])
+    _write_sorted_postings(postings, f"{seg_dir}/postings", n_docs)
+    return doclens
+
+
+def _seed_segment_catalog(
+    spark: SparkSession, segs_dir: str, ids: DataFrame, id_col: str
+) -> None:
+    """A seed's epilogue once `seg_base` is written: its `_covers` [-1]
+    (the pre-stream epoch), a one-line manifest, and the store-wide
+    summary bloom over `ids`."""
+    _write_covers(spark, f"{segs_dir}/seg_base", [-1])
+    _write_manifest(spark, segs_dir, ["seg_base"])
+    _write_segment_summary(spark, segs_dir, ids, id_col, ["seg_base"])
 
 
 def seed_bm25_index_segmented(docs: DataFrame, index_dir: str) -> None:
@@ -2773,41 +2895,10 @@ def seed_bm25_index_segmented(docs: DataFrame, index_dir: str) -> None:
     from ..operators.retrieval import bm25_index_build
 
     spark = docs.sparkSession
-    root = index_dir.rstrip("/")
+    segs = f"{index_dir.rstrip('/')}/segs"
     p, l, _ = bm25_index_build(docs)
-    # doclens first: its one aggregate feeds bloom sizing, the `_stats`
-    # sidecar AND the postings layout decision (a seed under
-    # _SMALL_SEG_DOCS writes one sorted file via _write_sorted_postings —
-    # repartitionByRange on a small corpus fans the table across
-    # shuffle-partition-count KB-sized files, and every serve then pays a
-    # one-task-per-file scan; guide §6 small files)
-    l.write.mode("overwrite").parquet(f"{root}/segs/seg_base/doclens")
-    l_back = spark.read.parquet(f"{root}/segs/seg_base/doclens")
-    row = l_back.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("doc_id").alias("lo"),
-        F.max("doc_id").alias("hi"),
-        F.sum("len").alias("sl"),
-    ).collect()[0]
-    _write_sorted_postings(p, f"{root}/segs/seg_base/postings", int(row["n"]))
-    _write_segment_bloom(
-        l_back,
-        "doc_id",
-        f"{root}/segs/seg_base",
-        stats=(int(row["n"]), row["lo"], row["hi"]),
-    )
-    _write_bm25_seg_stats(
-        spark, f"{root}/segs/seg_base", int(row["n"]), int(row["sl"] or 0)
-    )
-    _write_covers(spark, f"{root}/segs/seg_base", [-1])
-    _write_manifest(spark, f"{root}/segs", ["seg_base"])
-    _write_segment_summary(
-        spark,
-        f"{root}/segs",
-        l_back,
-        "doc_id",
-        ["seg_base"],
-    )
+    l_back = _write_bm25_segment(spark, f"{segs}/seg_base", p, l)
+    _seed_segment_catalog(spark, segs, l_back, "doc_id")
 
 
 def compact_bm25_segments(
@@ -2825,34 +2916,14 @@ def compact_bm25_segments(
     segs = f"{root}/segs"
 
     def write_merged(tmp: str, names: list[str], out_name: str) -> None:
-        postings = _read_segment_table(spark, segs, "postings", names)
-        doclens = _read_segment_table(spark, segs, "doclens", names)
-        # doclens first: its aggregate sizes the bloom, the `_stats`
-        # sidecar AND the merged postings layout (small merges take the
-        # one-sorted-file path; corpus-sized merges keep the range
-        # shuffle — same data-bounded rule as the per-epoch publisher)
-        doclens.write.mode("overwrite").parquet(f"{tmp}/{out_name}/doclens")
-        l_back = spark.read.parquet(f"{tmp}/{out_name}/doclens")
-        row = l_back.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("doc_id").alias("lo"),
-            F.max("doc_id").alias("hi"),
-            F.sum("len").alias("sl"),
-        ).collect()[0]
-        _write_segment_bloom(
-            l_back,
-            "doc_id",
-            f"{tmp}/{out_name}",
-            stats=(int(row["n"]), row["lo"], row["hi"]),
-        )
         # the merged segment's `_stats` is the exact sum of its
         # constituents' doclens — serve stats stay sidecar-resolved
         # across compactions
-        _write_bm25_seg_stats(
-            spark, f"{tmp}/{out_name}", int(row["n"]), int(row["sl"] or 0)
-        )
-        _write_sorted_postings(
-            postings, f"{tmp}/{out_name}/postings", int(row["n"])
+        _write_bm25_segment(
+            spark,
+            f"{tmp}/{out_name}",
+            _read_segment_table(spark, segs, "postings", names),
+            _read_segment_table(spark, segs, "doclens", names),
         )
 
     merged = _compact_segment_store(spark, root, write_merged, tiered=tiered)
@@ -2898,6 +2969,25 @@ def foreach_batch_upsert_bucketed(
     return _sink
 
 
+def _write_ivf_segment(
+    spark: SparkSession,
+    seg_dir: str,
+    lists: DataFrame,
+    codes: DataFrame,
+    stats: tuple[int, object, object] | None = None,
+) -> None:
+    """The one IVF-PQ segment writer (seed, per-epoch publish, compaction,
+    retrain): lists, codes, then the id bloom over the written lists'
+    vec_id column. `stats` = (n, id_min, id_max) from a caller that
+    already aggregated its delta sizes the bloom without its own stats
+    job (lists rows == batch rows)."""
+    lists.write.mode("overwrite").parquet(f"{seg_dir}/lists")
+    codes.write.mode("overwrite").parquet(f"{seg_dir}/codes")
+    _write_segment_bloom(
+        spark.read.parquet(f"{seg_dir}/lists"), "vec_id", seg_dir, stats=stats
+    )
+
+
 def seed_ivf_pq_index_segmented(
     emb: DataFrame,
     index_dir: str,
@@ -2926,23 +3016,15 @@ def seed_ivf_pq_index_segmented(
         pq_iter=pq_iter,
         dim=dim,
     )
+    spark = emb.sparkSession
     idx["centroids"].write.mode("overwrite").parquet(f"{root}/centroids")
     idx["codebook"].write.mode("overwrite").parquet(f"{root}/codebook")
-    idx["lists"].write.mode("overwrite").parquet(f"{root}/segs/seg_base/lists")
-    idx["codes"].write.mode("overwrite").parquet(f"{root}/segs/seg_base/codes")
-    _write_segment_bloom(
-        emb.sparkSession.read.parquet(f"{root}/segs/seg_base/lists"),
-        "vec_id",
-        f"{root}/segs/seg_base",
-    )
-    _write_covers(emb.sparkSession, f"{root}/segs/seg_base", [-1])
-    _write_manifest(emb.sparkSession, f"{root}/segs", ["seg_base"])
-    _write_segment_summary(
-        emb.sparkSession,
+    _write_ivf_segment(spark, f"{root}/segs/seg_base", idx["lists"], idx["codes"])
+    _seed_segment_catalog(
+        spark,
         f"{root}/segs",
-        emb.sparkSession.read.parquet(f"{root}/segs/seg_base/lists"),
+        spark.read.parquet(f"{root}/segs/seg_base/lists"),
         "vec_id",
-        ["seg_base"],
     )
 
 
@@ -3000,9 +3082,7 @@ def foreach_batch_ivf_pq_maintain_segmented(
         spark = batch_df.sparkSession
         root = index_dir.rstrip("/")
         _recover_parked(spark, root)  # retrain's whole-root swap park
-        _recover_parked(spark, f"{root}/segs")  # compaction-crash park
-        fs, P = _hadoop_fs(spark, root)
-        if _segment_replay_applied(spark, root, epoch_id, fs, P):
+        if _segment_epoch_applied(spark, root, epoch_id):
             return  # replay: live segment or compacted away
         # ONE delta aggregate replaces the separate isEmpty probe, the
         # bloom tier-1 min/max job, and the bloom-sizing count (guide
@@ -3018,30 +3098,14 @@ def foreach_batch_ivf_pq_maintain_segmented(
         n_delta = int(d["n"])
         if n_delta == 0:
             return
-        delta_ids = batch_df.select(F.col(id_col).alias("vec_id")).distinct()
-        segs = _store_path(spark, f"{root}/segs")
-        suspects = _bloom_suspect_segments(
-            spark, segs, delta_ids, "vec_id", delta_range=(d["lo"], d["hi"])
+        _raise_if_indexed(
+            spark,
+            root,
+            batch_df.select(F.col(id_col).alias("vec_id")),
+            "lists",
+            "ivf-pq",
+            (d["lo"], d["hi"]),
         )
-        if suspects != []:
-            # bloom hit or legacy store: exact-confirm against ONLY the
-            # suspect segments' lists (the full union when legacy)
-            lists = (
-                spark.read.parquet(*[f"{segs}/{s}/lists" for s in suspects])
-                if suspects is not None
-                else _read_segment_table(spark, segs, "lists")
-            )
-            dup = (
-                lists.join(F.broadcast(delta_ids), "vec_id", "left_semi")
-                .limit(1)
-                .collect()
-            )
-            if dup:
-                raise ValueError(
-                    f"ivf-pq segmented maintain: vec_id {dup[0]['vec_id']!r} is "
-                    "already indexed; appends must be disjoint from the stored "
-                    "index"
-                )
         # frozen quantizer tables only — the full 4-table segmented read
         # built two more per-epoch DataFrames (lists/codes unions with
         # their footer jobs) this sink never used
@@ -3056,22 +3120,21 @@ def foreach_batch_ivf_pq_maintain_segmented(
             vec_col=vec_col,
         )
         tmp = f"{root}/__ivfseg_epoch{int(epoch_id)}"
-        delta["lists"].write.mode("overwrite").parquet(f"{tmp}/lists")
-        delta["codes"].write.mode("overwrite").parquet(f"{tmp}/codes")
-        # lists rows == batch rows, so the delta aggregate above already
-        # sized the bitmap; vec_id-only projection prunes everything else
-        _write_segment_bloom(
-            spark.read.parquet(f"{tmp}/lists"),
-            "vec_id",
+        _write_ivf_segment(
+            spark,
             tmp,
+            delta["lists"],
+            delta["codes"],
             stats=(n_delta, d["lo"], d["hi"]),
         )
-        seg = P(f"{root}/segs/seg_{int(epoch_id)}")
-        fs.mkdirs(seg.getParent())
-        _rename_or_raise(fs, P(tmp), seg)  # publish (invisible until listed)
-        _manifest_add(spark, f"{root}/segs", f"seg_{int(epoch_id)}")
-        if compact_every and len(_live_segments(spark, f"{root}/segs")) >= compact_every:
-            compact_ivf_pq_segments(spark, index_dir, tiered=True)
+        _publish_segment(
+            spark,
+            tmp,
+            root,
+            epoch_id,
+            compactor=compact_ivf_pq_segments,
+            compact_every=compact_every,
+        )
 
     return _sink
 
@@ -3091,14 +3154,11 @@ def compact_ivf_pq_segments(
     segs = f"{root}/segs"
 
     def write_merged(tmp: str, names: list[str], out_name: str) -> None:
-        lists = _read_segment_table(spark, segs, "lists", names)
-        codes = _read_segment_table(spark, segs, "codes", names)
-        lists.write.mode("overwrite").parquet(f"{tmp}/{out_name}/lists")
-        codes.write.mode("overwrite").parquet(f"{tmp}/{out_name}/codes")
-        _write_segment_bloom(
-            spark.read.parquet(f"{tmp}/{out_name}/lists"),
-            "vec_id",
+        _write_ivf_segment(
+            spark,
             f"{tmp}/{out_name}",
+            _read_segment_table(spark, segs, "lists", names),
+            _read_segment_table(spark, segs, "codes", names),
         )
 
     merged = _compact_segment_store(spark, root, write_merged, tiered=tiered)
@@ -3180,13 +3240,7 @@ def ivf_pq_index_retrain(
     # install swaps the whole root
     idx["centroids"].write.mode("overwrite").parquet(f"{tmp}/centroids")
     idx["codebook"].write.mode("overwrite").parquet(f"{tmp}/codebook")
-    idx["lists"].write.mode("overwrite").parquet(f"{tmp}/segs/seg_base/lists")
-    idx["codes"].write.mode("overwrite").parquet(f"{tmp}/segs/seg_base/codes")
-    _write_segment_bloom(
-        spark.read.parquet(f"{tmp}/segs/seg_base/lists"),
-        "vec_id",
-        f"{tmp}/segs/seg_base",
-    )
+    _write_ivf_segment(spark, f"{tmp}/segs/seg_base", idx["lists"], idx["codes"])
     _write_text_sidecar(spark, f"{tmp}/segs/_manifest", "seg_base")
     _write_segment_summary(
         spark,
@@ -3227,9 +3281,7 @@ def foreach_batch_join_view_maintain(
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         root = view_dir.rstrip("/")
-        _recover_parked(spark, f"{root}/segs")  # compaction-crash park
-        fs, P = _hadoop_fs(spark, root)
-        if _segment_replay_applied(spark, root, epoch_id, fs, P):
+        if _segment_epoch_applied(spark, root, epoch_id):
             return  # replay: live segment or compacted away
         if batch_df.isEmpty():
             return
@@ -3241,12 +3293,14 @@ def foreach_batch_join_view_maintain(
         ).drop(dim[dim_key])
         tmp = f"{root}/__jv_epoch{int(epoch_id)}"
         delta_view.write.mode("overwrite").parquet(tmp)
-        seg = P(f"{root}/segs/seg_{int(epoch_id)}")
-        fs.mkdirs(seg.getParent())
-        _rename_or_raise(fs, P(tmp), seg)  # publish (invisible until listed)
-        _manifest_add(spark, f"{root}/segs", f"seg_{int(epoch_id)}")
-        if compact_every and len(_live_segments(spark, f"{root}/segs")) >= compact_every:
-            compact_join_view_segments(spark, view_dir, tiered=True)
+        _publish_segment(
+            spark,
+            tmp,
+            root,
+            epoch_id,
+            compactor=compact_join_view_segments,
+            compact_every=compact_every,
+        )
 
     return _sink
 
@@ -3293,9 +3347,7 @@ def foreach_batch_join_view_scd2_maintain(
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         root = view_dir.rstrip("/")
-        _recover_parked(spark, f"{root}/segs")
-        fs, P = _hadoop_fs(spark, root)
-        if _segment_replay_applied(spark, root, epoch_id, fs, P):
+        if _segment_epoch_applied(spark, root, epoch_id):
             return  # replay: live segment or compacted away
         if batch_df.isEmpty():
             return
@@ -3316,12 +3368,14 @@ def foreach_batch_join_view_scd2_maintain(
         )
         tmp = f"{root}/__jv2_epoch{int(epoch_id)}"
         delta_view.write.mode("overwrite").parquet(tmp)
-        seg = P(f"{root}/segs/seg_{int(epoch_id)}")
-        fs.mkdirs(seg.getParent())
-        _rename_or_raise(fs, P(tmp), seg)  # publish (invisible until listed)
-        _manifest_add(spark, f"{root}/segs", f"seg_{int(epoch_id)}")
-        if compact_every and len(_live_segments(spark, f"{root}/segs")) >= compact_every:
-            compact_join_view_segments(spark, view_dir, tiered=True)
+        _publish_segment(
+            spark,
+            tmp,
+            root,
+            epoch_id,
+            compactor=compact_join_view_segments,
+            compact_every=compact_every,
+        )
 
     return _sink
 
@@ -3451,8 +3505,8 @@ def foreach_batch_dedup_gate(
                 touched_acc = touched
             finally:
                 cand.unpersist()
-            fs.mkdirs(P(f"{root}/accepted"))
-            _rename_or_raise(fs, P(tmp), P(seg))  # epoch decided
+            # epoch decided
+            _publish_segment(spark, tmp, root, epoch_id, sub="accepted")
         # fold (always — replays re-fold idempotently)
         seg_fps = spark.read.parquet(seg).select(
             F.col("__fp").alias("fp"),
@@ -3728,8 +3782,8 @@ def foreach_batch_neardup_gate(
             )
             tmp = f"{root}/__gate_epoch{int(epoch_id)}"
             decided.write.mode("overwrite").parquet(tmp)
-            fs.mkdirs(P(f"{root}/decided"))
-            _rename_or_raise(fs, P(tmp), P(seg))  # epoch decided
+            # epoch decided
+            _publish_segment(spark, tmp, root, epoch_id, sub="decided")
         # fold (always): ALL the segment's docs — accepted AND dropped —
         # join the seen index; bands+shingles re-derived deterministically
         # on replay, reused from the decide phase on the happy path
@@ -4189,16 +4243,7 @@ def _relation_compacted_through(spark: SparkSession, root: str) -> int:
     -1 when no compaction has run. The marker lives at `_compacted`
     (underscore-hidden, like `_ledger`, so the root's partition
     discovery never sees it) with its own two-rename install."""
-    fs, P = _hadoop_fs(spark, root)
-    marker = _store_path(spark, f"{root}/_compacted")
-    if not fs.exists(P(marker)):
-        return -1
-    if fs.getFileStatus(P(marker)).isFile():
-        lines = _read_text_sidecar_lines(spark, marker)
-        return int(lines[0]) if lines else -1
-    # legacy format (stores compacted before round 11's optimization pass)
-    rows = spark.read.parquet(marker).select("compacted_through").collect()
-    return int(rows[0][0]) if rows else -1
+    return _read_compaction_marker(spark, f"{root}/_compacted")
 
 
 def compact_weighted_relation_store(

@@ -449,6 +449,38 @@ def test_pipeline_opens_filesystems_only_through_hadoop_fs():
     assert "getFileSystem(" in inspect.getsource(pl._hadoop_fs)
 
 
+def test_segment_epoch_protocol_has_one_prologue_and_one_publish():
+    """The segment-store epoch protocol is written once: one top-level
+    function (with its nested `_sink` closures) runs the replay gate, and
+    `_manifest_add` is reached only from the publish helper and the
+    gate's own repair — so a new segment publisher cannot copy the
+    protocol instead of calling it."""
+    import ast
+    import inspect
+
+    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
+
+    tree = ast.parse(inspect.getsource(pl))
+
+    def callers(name):
+        return sorted(
+            fn.name
+            for fn in tree.body
+            if isinstance(fn, ast.FunctionDef)
+            and any(
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Name)
+                and n.func.id == name
+                for n in ast.walk(fn)
+            )
+        )
+
+    assert len(callers("_segment_replay_applied")) == 1, callers(
+        "_segment_replay_applied"
+    )
+    assert len(callers("_manifest_add")) <= 2, callers("_manifest_add")
+
+
 @pytest.mark.slow
 def test_wagg_bucketed_crash_at_every_fs_op_is_recoverable(
     spark, tmp_path, monkeypatch
