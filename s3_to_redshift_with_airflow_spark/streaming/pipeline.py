@@ -2851,14 +2851,12 @@ def _write_bm25_segment(
     doclens, then the id bloom, the `_stats` sidecar and the term-sorted
     postings. Doclens go first because one aggregate over them — `stats`
     = (n_docs, id_min, id_max, sum_len) — sizes the bloom, fills `_stats`
-    AND picks the postings layout (a segment under _SMALL_SEG_DOCS writes
-    one sorted file; repartitionByRange on a small table fans it across
-    shuffle-partition-count KB-sized files, and every serve then pays a
-    one-task-per-file scan; guide §6 small files). Without `stats` the
-    aggregate runs over the written doclens read back, and the bloom is
-    built from that read-back; a caller that already aggregated its
-    delta passes `stats` and the bloom reads `doclens` as given. Returns
-    the doclens the bloom was built from."""
+    AND picks the postings layout (`_write_sorted_postings`: a small
+    segment is one sorted file, not shuffle-partition-count KB-sized
+    files that every serve scans one task each; guide §6 small files).
+    Without `stats` the aggregate and the bloom run over the written
+    doclens read back; a caller that already aggregated its delta passes
+    `stats`. Returns the doclens the bloom was built from."""
     doclens.write.mode("overwrite").parquet(f"{seg_dir}/doclens")
     if stats is None:
         doclens = spark.read.parquet(f"{seg_dir}/doclens")
