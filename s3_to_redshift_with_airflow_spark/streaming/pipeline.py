@@ -2853,7 +2853,7 @@ def _write_bm25_segment(
     = (n_docs, id_min, id_max, sum_len) — sizes the bloom, fills `_stats`
     AND picks the postings layout (`_write_sorted_postings`: a small
     segment is one sorted file, not shuffle-partition-count KB-sized
-    files that every serve scans one task each; guide §6 small files).
+    files that every serve scans one task each).
     Without `stats` the aggregate and the bloom run over the written
     doclens read back; a caller that already aggregated its delta passes
     `stats`. Returns the doclens the bloom was built from."""

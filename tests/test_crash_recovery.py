@@ -760,7 +760,7 @@ def _publish(scratch, segs, epoch):
 
 def _join_view_fixture(spark, tmp_path, name):
     """A manifest-mode join view (seg_base + one-line manifest) over a
-    three-key dimension, and a fact-batch builder."""
+    three-key dimension, and a fact-batch factory."""
     import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
 
     dim_path = str(tmp_path / f"{name}_dim")
